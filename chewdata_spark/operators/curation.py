@@ -1204,18 +1204,15 @@ def sa_curate_corpus(
     """
     from chewdata_spark.operators import dedup as D
     from chewdata_spark.operators.suffix import (
-        _cut_char_spans,
-        _cut_token_spans,
+        _GRAINS,
+        _cut_spans,
+        _marks,
         _merge_islands,
-        cut_repeat_spans_sa_tiled,
-        repeat_spans_sa_tiled,
-        repeat_spans_sa_tokens_tiled,
-        sa_contamination_scores,
-        sa_contamination_scores_tokens,
     )
     from chewdata_spark.operators.text import normalize_text
 
-    if grain not in ("char", "token", "bpe"):
+    g = _GRAINS.get(grain)
+    if g is None:
         raise ValueError(
             f"sa_curate_corpus grain must be char|token|bpe, got {grain!r}"
         )
@@ -1238,114 +1235,31 @@ def sa_curate_corpus(
         evaln = normalize_text(benchmark, id_col, text_col).select(
             F.col(id_col).alias("doc_id"), F.col("norm_text").alias("text")
         )
+    train, bench, col = lined, evaln, "text"
+    if g.pieces:
+        train, bench = _bpe_pieces(lined, evaln, bpe_iters)
+        col = "pieces"
 
-    if grain == "bpe":
-        from chewdata_spark.operators.tokenize import (
-            bpe_encode_corpus_rules,
-            bpe_train_rules,
+    # the tiled repeat operator already returns MERGED islands — with
+    # no benchmark re-merging would add a redundant window + groupBy
+    spans = g.tiled(train, col, tile, min_len)
+    if bench is not None:
+        scored = g.scores(
+            train, bench, col, compare_cap, min_len, bucket_len, max_bucket,
+            g.alphabet,
         )
-
-        rules = bpe_train_rules(lined, "text", iters=bpe_iters)
-        # independent lazy checkpoints per piece relation: each feeds
-        # several scorer branches; measured faster than a union encode
-        # (see curate_pipeline_decontam_sa_bpe's in-code note)
-        ptrain = bpe_encode_corpus_rules(
-            lined, "doc_id", "text", rules
-        ).select("doc_id", "pieces").localCheckpoint(eager=False)
-        rtiled = repeat_spans_sa_tokens_tiled(
-            ptrain, "doc_id", "pieces", tile=tile, min_tokens=min_len
-        )
-        if evaln is not None:
-            rmarks = rtiled.select(
-                "doc_id",
-                F.col("span_start").alias("s"),
-                F.col("span_end").alias("e"),
-            )
-            pbench = bpe_encode_corpus_rules(
-                evaln, "doc_id", "text", rules
-            ).select("doc_id", "pieces").localCheckpoint(eager=False)
-            # "bounded": the piece vocabulary is base chars + trained
-            # merges by construction, so the "auto" sample pre-screen
-            # (an extra corpus-scale probe job at construction) is
-            # skipped; the full probe keeps the bit-identical string
-            # fallback (r16 interleaved A/B on the BPE flagship:
-            # 29.09 -> 27.54 s)
-            scored = sa_contamination_scores_tokens(
-                ptrain, pbench, "doc_id", "pieces",
-                max_tokens=compare_cap, min_tokens=min_len,
-                bucket_tokens=bucket_len, max_bucket=max_bucket,
-                full_doc=True, int_alphabet="bounded",
-            )
-            cmarks = scored.filter(F.col("m") >= min_len).select(
-                "doc_id",
-                F.col("off").alias("s"),
-                (F.col("off") + F.col("m") - 1).alias("e"),
-            )
-            spans = _merge_islands(rmarks.unionByName(cmarks))
-        else:
-            # the tiled repeat operator already returns MERGED islands
-            # — re-merging would add a redundant window + groupBy
-            spans = rtiled
-        decon = _cut_token_spans(ptrain, "doc_id", "pieces", spans)
-        evidence = True
-    elif grain == "token":
-        rtiled = repeat_spans_sa_tokens_tiled(
-            lined, "doc_id", "text", tile=tile, min_tokens=min_len
-        )
-        rmarks = rtiled.select(
+        rmarks = spans.select(
             "doc_id",
             F.col("span_start").alias("s"),
             F.col("span_end").alias("e"),
         )
-        if evaln is not None:
-            # word-token vocabulary is UNBOUNDED by contract -> "auto"
-            # probes it and int-encodes only when bounded in practice,
-            # falling back to the string-array path otherwise
-            # (bit-identical either way)
-            scored = sa_contamination_scores_tokens(
-                lined, evaln, "doc_id", "text",
-                max_tokens=compare_cap, min_tokens=min_len,
-                bucket_tokens=bucket_len, max_bucket=max_bucket,
-                full_doc=True, int_alphabet="auto",
-            )
-            cmarks = scored.filter(F.col("m") >= min_len).select(
-                "doc_id",
-                F.col("off").alias("s"),
-                (F.col("off") + F.col("m") - 1).alias("e"),
-            )
-            spans = _merge_islands(rmarks.unionByName(cmarks))
-        else:
-            spans = rtiled  # already merged by the tiled operator
-        decon = _cut_token_spans(lined, "doc_id", "text", spans)
-        evidence = True
-    elif evaln is not None:
-        rmarks = repeat_spans_sa_tiled(
-            lined, "doc_id", "text", tile=tile, min_len=min_len
-        ).select(
-            "doc_id",
-            F.col("span_start").alias("s"),
-            F.col("span_end").alias("e"),
+        spans = _merge_islands(
+            rmarks.unionByName(_marks(scored, "m", min_len))
         )
-        scored = sa_contamination_scores(
-            lined, evaln, "doc_id", "text",
-            max_chars=compare_cap, min_len=min_len,
-            bucket_len=bucket_len, max_bucket=max_bucket, full_doc=True,
-        )
-        cmarks = scored.filter(F.col("m") >= min_len).select(
-            "doc_id",
-            F.col("off").alias("s"),
-            (F.col("off") + F.col("m") - 1).alias("e"),
-        )
-        decon = _cut_char_spans(
-            lined, "doc_id", "text",
-            _merge_islands(rmarks.unionByName(cmarks)),
-        )
-        evidence = True
-    else:
-        decon = cut_repeat_spans_sa_tiled(
-            lined, "doc_id", "text", tile=tile, min_len=min_len
-        ).select("doc_id", "clean_text")
-        evidence = False
+    evidence = ["n_spans", "n_cut"] if bench is not None or g.evidence else []
+    decon = _cut_spans(g, train, "doc_id", col, spans).select(
+        "doc_id", "clean_text", *evidence
+    )
 
     joined = decon
     if carry:
@@ -1357,10 +1271,30 @@ def sa_curate_corpus(
         out = stratum_quota(
             joined, quota_col, "doc_id", max_per_stratum=max_per_stratum
         )
-    cols = ["doc_id", *carry, "clean_text"]
-    if evidence:
-        cols += ["n_spans", "n_cut"]
-    out = out.select(*cols)
+    out = out.select("doc_id", *carry, "clean_text", *evidence)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)
     return out
+
+
+def _bpe_pieces(
+    lined: DataFrame, evaln: DataFrame | None, iters: int
+) -> tuple[DataFrame, DataFrame | None]:
+    """BPE ``iters`` merges trained on the curated training text; both
+    sides encode to ``(doc_id, pieces)`` under those rules.
+    Independent lazy checkpoints per piece relation: each feeds several
+    scorer branches; measured faster than a union encode (see
+    curate_pipeline_decontam_sa_bpe's in-code note)."""
+    from chewdata_spark.operators.tokenize import (
+        bpe_encode_corpus_rules,
+        bpe_train_rules,
+    )
+
+    rules = bpe_train_rules(lined, "text", iters=iters)
+
+    def encode(df: DataFrame) -> DataFrame:
+        return bpe_encode_corpus_rules(df, "doc_id", "text", rules).select(
+            "doc_id", "pieces"
+        ).localCheckpoint(eager=False)
+
+    return encode(lined), None if evaln is None else encode(evaln)

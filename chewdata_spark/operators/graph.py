@@ -157,7 +157,8 @@ def pagerank(
     edges = edges.localCheckpoint(eager=False)
     # r15 examined + DECLINED: lazily checkpointing `nodes`/`out_deg`
     # (node-grain, re-appearing in every round's plan) measured 0.87x —
-    # SLOWER — in an interleaved A/B (scripts/ab_misc.py): ReuseExchange
+    # SLOWER — in an interleaved A/B (OPTIMIZATION_r15.md, "Examined and
+    # DECLINED: pagerank node-grain checkpoints"): ReuseExchange
     # already deduplicates the repeated distinct/aggregate subtrees
     # within the one final plan, so the checkpoints only added
     # materialization cost.  Left as the single edge checkpoint.

@@ -49,158 +49,86 @@ Spark-first design (no concatenated corpus string, no driver-side sort):
 Scale: position count = ``max_chars``-capped chars per doc × docs; every
 stage is a keyed shuffle or a bounded window; the driver sees only the
 per-round uniqueness flag and the final top-N.
+
+Grains.  Every stage above is written once, over a private ``_Grain``
+adapter that hides the unit format; the stages never ask which grain
+they run at.  ``_CHAR`` ranks characters of a string column ``t``;
+``_TOKEN`` ranks whitespace tokens of an array column ``toks`` (and
+``_BPE`` is ``_TOKEN`` over a trained piece stream, used only by
+``operators/curation.py::sa_curate_corpus``).  An adapter holds:
+``col`` (the unit column of a docs relation), ``units`` / ``keep`` /
+``size`` / ``slice`` (whole unit sequence of a text column, its
+non-empty test, its length and a 1-based sub-sequence), ``base`` and
+``h0`` (the round-0 rank builder and how many units it covers),
+``lcp`` and ``splice`` (the bounded LCP cursor SQL and the span-cut
+reassembly SQL), ``kw`` (the public kwarg names of the window,
+threshold and bucket, for error messages), and the ``sa_pipeline``
+settings ``defaults``, ``alphabet``, ``pieces``, ``evidence``,
+``tiled`` and ``scores``.  Each public char/token function is a thin
+binding of one grain-generic stage function.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+from dataclasses import dataclass, replace
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+#: Max rank lookups per refinement round (coverage multiplies by
+#: ``_KARY_MAX + 1`` per round).  Each extra lookup adds one seeker
+#: copy of the ACTIVE tail (small after the wide base) to the one
+#: corpus-sized lookup join; 7 collapses every declared window
+#: (char 64/128/256 from h0=32, tokens 64 from h0=4) to 1-2 rounds.
+_KARY_MAX = 7
 
-def suffix_ranks(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    max_chars: int = 256,
-) -> DataFrame:
-    """(doc_id, off, rank): the corpus suffix array as a rank relation —
-    ``rank`` is the NON-DENSE 1-based position rank of suffix
-    ``text[off:]`` in the sorted order of ALL suffixes (``1 +
-    #positions with a strictly smaller suffix``; identical suffixes
-    share a rank, and the next distinct suffix sits at ``rank + m``).
 
-    ISA-style prefix doubling: each round splits tie groups in place —
-    ``rank(p) = 1 + #smaller`` is invariant under refinement, because a
-    group member with k in-group predecessors under ``nxt`` gains
-    exactly k newly-smaller positions, so ``rank += rank() - 1``
-    windowed WITHIN the group is the whole update.  Singleton groups
-    are final and leave the working set; every window partitions by
-    the previous rank; an eager localCheckpoint per round truncates the
-    iterative lineage (and flags the query construct-each for bench)."""
-    return _char_ranks(_char_docs(df, id_col, text_col, max_chars), max_chars).select(
-        "doc_id", "off", "rank"
+def _sum_before(n: str, order: str, *part: str) -> Column:
+    """Running sum of ``n`` over the rows strictly before this one in
+    ``order`` (0 for the first), per ``part`` partition — unpartitioned
+    when ``part`` is empty."""
+    w = (
+        Window.partitionBy(*part)
+        .orderBy(order)
+        .rowsBetween(Window.unboundedPreceding, -1)
     )
-
-
-def _char_ranks(docs: DataFrame, max_chars: int) -> DataFrame:
-    """The char-grain rank builder over an already-windowed
-    ``(doc_id, t)`` relation — ``doc_id`` may be any joinable type
-    (:func:`repeat_spans_sa_tiled` passes a (doc, window) struct).
-
-    Round 0 ranks by the first THIRTY-TWO chars, not one: the doubling
-    loop then starts at ``h = 32``, skipping its most expensive rounds
-    (the early rounds touch every position — nothing has frozen yet),
-    and positions whose 32-char context is corpus-unique freeze at
-    round 0 without entering the loop at all.  Long-gram ranks keep
-    the suffix-order convention for free, because a shorter suffix
-    that is a prefix of a longer one compares smaller as a plain
-    string (``"ab" < "abX"``).  The gram alphabet is too wide for a
-    single 2-char-bucketed pass, so the base prefix sum runs the
-    THREE-level ORDER-PRESERVING device: the distinct-gram window
-    partitions by the gram's 4-char prefix (prefix order agrees with
-    gram order), the 4-char bucket offsets partition by THEIR 2-char
-    prefix, and only the 2-char bucket-of-bucket offsets (<= charset²
-    rows) see an unpartitioned window — bounded width at every
-    level."""
-    # r15: the base gram is 32 chars (was 8).  Measured at sf0.1, the
-    # 8-char base froze almost nothing (1.80M of 1.80M positions still
-    # active after round 0 — natural text repeats its 8-grams heavily)
-    # so the loop ran its two widest rounds (h=8: 1.80M active, h=16:
-    # 1.39M active) over nearly the whole corpus.  Ranking the base by
-    # the first 32 chars freezes every position whose 32-char context
-    # is corpus-unique (~83% at sf0.1) before the loop, which then
-    # starts at h=32 with only the true near-duplicate tail (~317k).
-    # Exact for any h0: the non-dense rank by the first h0 units is
-    # the same fixpoint the doubling reaches at h0, so the final ranks
-    # are bit-identical.  Shorter windows (max_chars < 32) just rank
-    # whole suffixes at round 0 and skip the loop.  (_H0_CHAR is a
-    # module constant so the r16 h0 x K sweep could monkeypatch it;
-    # results are bit-identical for any value.)
-    h0 = _H0_CHAR
-    pos = (
-        docs.select(
-            "doc_id",
-            F.explode(F.expr("sequence(1, length(t))")).alias("off"),
-            "t",
-        )
-        .select(
-            "doc_id",
-            "off",
-            F.expr(f"substring(t, off, {h0})").alias("g"),
-        )
-    )
-    return _prefix_double(
-        _two_level_base_ranks(
-            pos,
-            "g",
-            bucket=F.substring("g", 1, 4),
-            bucket2=F.substring(F.col("_bk"), 1, 2),
-        ),
-        max_chars,
-        h0=h0,
-    )
+    return F.coalesce(F.sum(n).over(w), F.lit(0))
 
 
 def _two_level_base_ranks(
-    pos: DataFrame, unit_col: str, bucket=None, bucket2=None
+    pos: DataFrame, unit_col: str, bucket: Column, bucket2: Column | None = None
 ) -> DataFrame:
     """(doc_id, off, rank): round-0 non-dense ranks of a
     vocabulary-sized unit column (char gram or a token struct) via the
     two-level ORDER-PRESERVING prefix sum — the corpus-sized window
     partitions by a prefix bucket (``bucket`` must be an expression
-    whose order agrees with the unit order on bucket boundaries;
-    default = the unit's own 2-char prefix), and only the bucket-count
-    offsets see an unpartitioned window.  When ``bucket`` is wider
-    than 2 chars the bucket-count relation itself outgrows one
-    partition; ``bucket2`` (an expression over the ``_bk`` column —
-    e.g. its 2-char prefix) then adds a THIRD level: bucket offsets
-    partition by ``bucket2`` and only the bucket2-count offsets
-    (<= charset² rows) run unpartitioned — bounded width at every
-    level.  ``rank = 1 + #positions with a strictly smaller unit``;
-    ties share."""
-    if bucket is None:
-        bucket = F.substring(unit_col, 1, 2)
+    whose order agrees with the unit order on bucket boundaries), and
+    only the bucket-count offsets see an unpartitioned window.  When
+    ``bucket`` is wider than 2 chars the bucket-count relation itself
+    outgrows one partition; ``bucket2`` (an expression over the
+    ``_bk`` column — e.g. its 2-char prefix) then adds a THIRD level:
+    bucket offsets partition by ``bucket2`` and only the bucket2-count
+    offsets (<= charset² rows) run unpartitioned — bounded width at
+    every level.  ``rank = 1 + #positions with a strictly smaller
+    unit``; ties share."""
     counts = pos.groupBy(unit_col).agg(F.count(F.lit(1)).alias("_n"))
     bucketed = counts.withColumn("_bk", bucket)
-    in_bucket = (
-        Window.partitionBy("_bk")
-        .orderBy(unit_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = bucketed.withColumn(
-        "_loc", F.coalesce(F.sum("_n").over(in_bucket), F.lit(0))
-    )
+    local = bucketed.withColumn("_loc", _sum_before("_n", unit_col, "_bk"))
     bcounts = bucketed.groupBy("_bk").agg(F.sum("_n").alias("_bn"))
-    if bucket2 is not None:
+    if bucket2 is None:
+        boffsets = bcounts.select("_bk", _sum_before("_bn", "_bk").alias("_boff"))
+    else:
         b2 = bcounts.withColumn("_bk2", bucket2)
-        in_b2 = (
-            Window.partitionBy("_bk2")
-            .orderBy("_bk")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        b2local = b2.withColumn(
-            "_loc2", F.coalesce(F.sum("_bn").over(in_b2), F.lit(0))
-        )
-        b2counts = b2.groupBy("_bk2").agg(F.sum("_bn").alias("_b2n"))
-        off2_w = Window.orderBy("_bk2").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        b2offsets = b2counts.select(
-            "_bk2",
-            F.coalesce(F.sum("_b2n").over(off2_w), F.lit(0)).alias("_b2off"),
+        b2local = b2.withColumn("_loc2", _sum_before("_bn", "_bk", "_bk2"))
+        b2offsets = (
+            b2.groupBy("_bk2")
+            .agg(F.sum("_bn").alias("_b2n"))
+            .select("_bk2", _sum_before("_b2n", "_bk2").alias("_b2off"))
         )
         boffsets = b2local.join(b2offsets, "_bk2").select(
             "_bk", (F.col("_b2off") + F.col("_loc2")).alias("_boff")
-        )
-    else:
-        off_w = Window.orderBy("_bk").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        boffsets = bcounts.select(
-            "_bk",
-            F.coalesce(F.sum("_bn").over(off_w), F.lit(0)).alias("_boff"),
         )
     base = local.join(boffsets, "_bk").select(
         unit_col,
@@ -209,21 +137,6 @@ def _two_level_base_ranks(
     return pos.join(base, unit_col).select(
         "doc_id", "off", F.col("_base").alias("rank")
     )
-
-
-#: Round-0 base-rank width for the CHAR grain (chars of context the
-#: three-level order-preserving prefix sum ranks before the k-ary
-#: loop).  32 wins the r16 sweep (scripts/ab_h0.py): 16 halves the
-#: base-exchange key bytes but leaves a ~4x larger active tail for
-#: the loop, which costs more than the narrower keys save.
-_H0_CHAR = 32
-
-#: Max rank lookups per refinement round (coverage multiplies by
-#: ``_KARY_MAX + 1`` per round).  Each extra lookup adds one seeker
-#: copy of the ACTIVE tail (small after the wide base) to the one
-#: corpus-sized lookup join; 7 collapses every declared window
-#: (char 64/128/256 from h0=32, tokens 64 from h0=4) to 1-2 rounds.
-_KARY_MAX = 7
 
 
 def _prefix_double(
@@ -259,11 +172,6 @@ def _prefix_double(
     representative-suffix step a corpus-sized groupBy: a singleton
     group's only member IS its representative (see
     :func:`_rep_suffixes`)."""
-    if h0 >= max_units:  # base ranks already cover the whole window
-        return work.withColumn(
-            "m", F.count(F.lit(1)).over(Window.partitionBy("rank"))
-        ).localCheckpoint()
-
     # a frozen (singleton-group) position never re-activates, so only
     # the last round's refined rows can still split: per-round work is
     # bounded by the surviving tie mass, which collapses to the
@@ -272,7 +180,9 @@ def _prefix_double(
     frozen: list[DataFrame] = []
     h = h0
     # round-0 group sizes: one window over the base ranks (the loop
-    # folds this into the refinement window for every later round)
+    # folds this into the refinement window for every later round);
+    # when the base ranks already cover the whole window (h0 >=
+    # max_units) these are the final groups and the loop never runs
     work = work.withColumn(
         "_m", F.count(F.lit(1)).over(Window.partitionBy("rank"))
     ).localCheckpoint()
@@ -287,16 +197,12 @@ def _prefix_double(
         # K probes this round: enough to finish in one round when the
         # remaining factor fits, else the cap
         k = min(_KARY_MAX, -(-max_units // h) - 1)
-        def _lk(df: DataFrame) -> DataFrame:
-            return df.select(
-                "doc_id",
-                F.col("off").alias("_loff"),
-                F.col("rank").alias("nxt"),
+        lookup = _union([
+            piece.select(
+                "doc_id", F.col("off").alias("_loff"), F.col("rank").alias("nxt")
             )
-
-        lookup = _lk(still)
-        for piece in frozen:
-            lookup = lookup.unionByName(_lk(piece))
+            for piece in [still, *frozen]
+        ])
         nxt_cols = [f"_n{i}" for i in range(1, k + 1)]
         # the new rank is the old rank plus the number of strictly
         # smaller in-group tuples (rank() - 1): 1 + #smaller is
@@ -330,9 +236,7 @@ def _prefix_double(
                 "doc_id",
                 "off",
                 "rank",
-                F.explode(
-                    F.expr(f"sequence(1, {k})")
-                ).alias("_k"),
+                F.explode(F.expr(f"sequence(1, {k})")).alias("_k"),
             ).withColumn("_loff", F.col("off") + F.col("_k") * F.lit(h))
             refined = (
                 seekers.join(lookup, ["doc_id", "_loff"], "left")
@@ -349,97 +253,131 @@ def _prefix_double(
                     ]
                 )
             )
-        work = (
-            refined.select(
-                "doc_id",
-                "off",
-                (F.col("rank") + F.rank().over(grp_w) - 1).alias("rank"),
-                F.count(F.lit(1)).over(peer_w).alias("_m"),
-            )
-            .localCheckpoint()
-        )
+        work = refined.select(
+            "doc_id",
+            "off",
+            (F.col("rank") + F.rank().over(grp_w) - 1).alias("rank"),
+            F.count(F.lit(1)).over(peer_w).alias("_m"),
+        ).localCheckpoint()
         h *= k + 1
-    out = frozen[0]
-    for piece in frozen[1:]:
-        out = out.unionByName(piece)
     if work is not None:  # max_units reached with ties left (true dups)
-        out = out.unionByName(work)
-    return out.withColumnRenamed("_m", "m")
+        frozen.append(work)
+    return _union(frozen).withColumnRenamed("_m", "m")
 
 
-def _token_docs(
-    df: DataFrame, id_col: str, text_col: str, max_tokens: int
-) -> DataFrame:
-    """(doc_id, toks): the first ``max_tokens`` whitespace tokens of
-    each doc — the token-grain corpus relation both the rank builder
-    and the LCP re-fetch read, so the two sides always tokenize
-    identically."""
-    return (
-        df.select(
-            F.col(id_col).alias("doc_id"),
-            F.slice(
-                F.split(F.trim(F.col(text_col)), r"\s+"), 1, max_tokens
-            ).alias("toks"),
-        )
-        .filter(F.size("toks") > 0)
-        .filter((F.size("toks") > 1) | (F.element_at("toks", 1) != ""))
+def _union(parts: list[DataFrame]) -> DataFrame:
+    """``parts`` unioned by column name, in order."""
+    out = parts[0]
+    for part in parts[1:]:
+        out = out.unionByName(part)
+    return out
+
+
+def _char_base(docs: DataFrame, h0: int) -> DataFrame:
+    """Round-0 CHAR ranks over an already-windowed ``(doc_id, t)``
+    relation — ``doc_id`` may be any joinable type (the tiled variant
+    passes a (doc, window) struct).
+
+    Round 0 ranks by the first ``h0`` = THIRTY-TWO chars, not one: the
+    doubling loop then starts at ``h = 32``, skipping its most
+    expensive rounds (the early rounds touch every position — nothing
+    has frozen yet), and positions whose 32-char context is
+    corpus-unique freeze at round 0 without entering the loop at all.
+    Long-gram ranks keep the suffix-order convention for free, because
+    a shorter suffix that is a prefix of a longer one compares smaller
+    as a plain string (``"ab" < "abX"``).  The gram alphabet is too
+    wide for a single 2-char-bucketed pass, so the base prefix sum runs
+    the THREE-level ORDER-PRESERVING device: the distinct-gram window
+    partitions by the gram's 4-char prefix (prefix order agrees with
+    gram order), the 4-char bucket offsets partition by THEIR 2-char
+    prefix, and only the 2-char bucket-of-bucket offsets (<= charset²
+    rows) see an unpartitioned window — bounded width at every
+    level."""
+    # r15: the base gram is 32 chars (was 8).  Measured at sf0.1, the
+    # 8-char base froze almost nothing (1.80M of 1.80M positions still
+    # active after round 0 — natural text repeats its 8-grams heavily)
+    # so the loop ran its two widest rounds (h=8: 1.80M active, h=16:
+    # 1.39M active) over nearly the whole corpus.  Ranking the base by
+    # the first 32 chars freezes every position whose 32-char context
+    # is corpus-unique (~83% at sf0.1) before the loop, which then
+    # starts at h=32 with only the true near-duplicate tail (~317k).
+    # Exact for any h0: the non-dense rank by the first h0 units is
+    # the same fixpoint the doubling reaches at h0, so the final ranks
+    # are bit-identical.  Shorter windows (max_chars < 32) just rank
+    # whole suffixes at round 0 and skip the loop.
+    return _two_level_base_ranks(
+        _suffixes(_CHAR, docs, h0),
+        "suf",
+        bucket=F.substring("suf", 1, 4),
+        bucket2=F.substring(F.col("_bk"), 1, 2),
     )
 
 
-def _char_docs(
-    df: DataFrame, id_col: str, text_col: str, max_chars: int
-) -> DataFrame:
-    """(doc_id, t): the first ``max_chars`` chars of each non-empty doc
-    — the char-grain corpus relation both the rank builder and every
-    LCP re-fetch read, so the two sides always window identically."""
-    return (
-        df.select(
-            F.col(id_col).alias("doc_id"),
-            F.substring(F.col(text_col), 1, max_chars).alias("t"),
-        )
-        .filter(F.length("t") > 0)
+def _token_base(docs: DataFrame, h0: int) -> DataFrame:
+    """Round-0 TOKEN ranks over an already-windowed ``(doc_id, toks)``
+    relation: the first ``h0`` = FOUR tokens, the token-grain
+    counterpart of the char path's gram base.  The base key is a
+    STRUCT ``(w1..w4)`` with trailing fields null where the suffix
+    runs out — Spark struct ordering compares field-wise with
+    null-sorts-first, which IS tuple lexicographic order with
+    shorter-suffix-sorts-first (nulls fill monotonically from the end,
+    so a null field always means "suffix ended here"), the exact
+    suffix convention the doubling loop refines.  (A separator-joined
+    string key is NOT sound here: no separator sorts below every
+    possible token byte — whitespace-split tokens can contain control
+    chars below 0x20, even \\x00 — so ``w1 || ' ' || w2`` misorders
+    such corpora; the struct comparison has no separator to collide.)
+    The two-level bucket stays ``substring(w1, 1, 2)`` — prefix order
+    of the FIRST field agrees with tuple order.  (Formerly
+    ``_token_ranks``, the name some public docstrings still cite.)"""
+    pos = docs.select(
+        "doc_id",
+        F.posexplode("toks").alias("off0", "w"),
+        F.col("toks").alias("_tk"),
+    ).select(
+        "doc_id",
+        (F.col("off0") + 1).alias("off"),
+        F.struct(
+            F.col("w").alias("w1"),
+            *[
+                F.expr(f"try_element_at(_tk, CAST(off0 + {i} AS INT))").alias(
+                    f"w{i}"
+                )
+                for i in range(2, h0 + 1)
+            ],
+        ).alias("u"),
+    )
+    return _two_level_base_ranks(
+        pos, "u", bucket=F.substring(F.col("u.w1"), 1, 2)
     )
 
 
-def _lcp_sql(unit: str, a: str = "suf", b: str = "suf2", cap: int = 256) -> str:
-    """SQL for the bounded LCP cursor between two suffix columns; units
-    are chars (string suffixes) or tokens (array suffixes).
-
-    CHAR grain: greedy binary refinement over descending power-of-two
+def _char_lcp(a: str = "suf", b: str = "suf2", cap: int = 256) -> str:
+    """SQL for the bounded LCP cursor between two STRING suffix
+    columns: greedy binary refinement over descending power-of-two
     window widths — ``n`` advances past each window whose chars match
     both sides.  Exact for any LCP <= ``cap``: ``n`` can never advance
     past a true mismatch (every window containing the mismatch char
     compares unequal on both sides, truncated or not), and when the
     shared prefix exhausts one side the final ``least(length, length)``
     cap lands exactly on the min length (r15 microbench + planted
-    mismatch sweep: scripts/bench_lcp.py, 0 mismatches over 1M
-    adversarial pairs).  Why: Catalyst higher-order functions are
-    CodegenFallback — interpreted, one closure call per element — so
-    the old per-char fold paid up to ``cap`` interpreted steps (and an
-    O(i) UTF8 offset scan per ``substring(col, i, 1)``, quadratic in
-    the match length); this pays ``log2(cap)+1`` steps of one memcmp
-    each.  Measured 3.6x faster on the flagship pair shape (guide §1/
-    §4: per-task work, replace interpreted row loops).
-
-    TOKEN grain keeps the per-element fold: ``element_at`` is O(1) on
-    arrays and the binary variant's ``slice()`` allocates a copy per
-    step — measured SLOWER (0.27 s fold vs 1.75 s binary on 300k
-    array pairs), so the fold stays."""
-    if unit == "char":
-        p = 1
-        while p < cap:
-            p *= 2
-        powers = []
-        while p >= 1:
-            powers.append(p)
-            p //= 2
-        arr = ",".join(str(w) for w in powers)
-        return f"""
+    mismatch sweep, 0 mismatches over 1M adversarial pairs:
+    OPTIMIZATION_r15.md, change 1).  Why: Catalyst higher-order
+    functions are CodegenFallback — interpreted, one closure call per
+    element — so the old per-char fold paid up to ``cap`` interpreted
+    steps (and an O(i) UTF8 offset scan per ``substring(col, i, 1)``,
+    quadratic in the match length); this pays ``log2(cap)+1`` steps of
+    one memcmp each.  Measured 3.6x faster on the flagship pair shape
+    (guide §1/§4: per-task work, replace interpreted row loops)."""
+    widths = ",".join(
+        str(2**i) for i in range((cap - 1).bit_length(), -1, -1)
+    )
+    return f"""
         CASE WHEN {a} IS NULL OR {b} IS NULL THEN NULL ELSE
           least(
             least(length({a}), length({b})),
             aggregate(
-              array({arr}),
+              array({widths}),
               0,
               (n, w) -> if(substring({a}, n + 1, w) = substring({b}, n + 1, w),
                            n + w, n)
@@ -447,6 +385,14 @@ def _lcp_sql(unit: str, a: str = "suf", b: str = "suf2", cap: int = 256) -> str:
           )
         END
     """
+
+
+def _token_lcp(a: str = "suf", b: str = "suf2", cap: int = 256) -> str:
+    """SQL for the LCP cursor between two ARRAY suffix columns (``cap``
+    is implied by the slices).  It keeps the per-element fold:
+    ``element_at`` is O(1) on arrays and the binary variant's
+    ``slice()`` allocates a copy per step — measured SLOWER (0.27 s
+    fold vs 1.75 s binary on 300k array pairs)."""
     return f"""
         aggregate(
           sequence(1, least(size({a}), size({b}))),
@@ -458,14 +404,192 @@ def _lcp_sql(unit: str, a: str = "suf", b: str = "suf2", cap: int = 256) -> str:
     """
 
 
+@dataclass(frozen=True)
+class _Grain:
+    """One suffix-array unit format (see "Grains" in the module
+    docstring).  Functions over columns take and return ``Column``s;
+    ``slice`` takes a 1-based start and a length, ints or columns."""
+
+    col: str
+    units: Callable[[Column], Column]
+    keep: Callable[[Column], Column]
+    size: Callable[[Column], Column]
+    slice: Callable[..., Column]
+    base: Callable[[DataFrame, int], DataFrame]
+    h0: int
+    lcp: Callable[..., str]
+    splice: str
+    kw: tuple[str, str, str]
+    # sa_pipeline (operators/curation.py::sa_curate_corpus): its
+    # (min_len, tile, bucket_len, compare_cap) defaults; the scorer's
+    # int_alphabet policy; whether it trains BPE and runs on the piece
+    # stream; whether it reports n_spans/n_cut without a benchmark; and
+    # its two suffix stages, which call the PUBLIC bindings through the
+    # module at call time, so a wrapper installed on a public name (a
+    # tracer, a profiler) sees the pipeline's call too
+    defaults: tuple[int, int, int, int]
+    tiled: Callable[..., DataFrame]
+    scores: Callable[..., DataFrame]
+    alphabet: bool | str = False
+    pieces: bool = False
+    evidence: bool = True
+
+
+_CHAR = _Grain(
+    col="t",
+    units=lambda c: c,
+    keep=lambda c: F.length(c) > 0,
+    size=F.length,
+    slice=F.substring,
+    base=_char_base,
+    # 32 wins the r16 h0 x K sweep (OPTIMIZATION_r16.md, change 4): 16
+    # halves the base-exchange key bytes but leaves a ~4x larger active
+    # tail for the loop, which costs more than the narrower keys save
+    h0=32,
+    lcp=_char_lcp,
+    splice="""
+        aggregate(
+          spans,
+          named_struct('p', 1, 'acc', ''),
+          (a, sp) -> named_struct(
+              'p', CAST(sp.span_end + 1 AS INT),
+              'acc', concat(a.acc, substring(t, a.p, sp.span_start - a.p))),
+          a -> concat(a.acc, substring(t, a.p))
+        )
+        """,
+    kw=("max_chars", "min_len", "bucket_len"),
+    defaults=(30, 128, 8, 64),
+    tiled=lambda df, col, tile, n: repeat_spans_sa_tiled(
+        df, "doc_id", col, tile=tile, min_len=n
+    ),
+    scores=lambda new, seen, col, cap, n, bk, mb, _ia: sa_contamination_scores(
+        new, seen, "doc_id", col, max_chars=cap, min_len=n,
+        bucket_len=bk, max_bucket=mb, full_doc=True,
+    ),
+    # the repeat-only char pipeline keeps curate_pipeline_full_sa's
+    # (doc_id, clean_text) contract
+    evidence=False,
+)
+
+_TOKEN = _Grain(
+    col="toks",
+    units=lambda c: F.split(F.trim(c), r"\s+"),
+    keep=lambda c: (F.size(c) > 1) | (F.element_at(c, 1) != ""),
+    size=F.size,
+    slice=F.slice,
+    base=_token_base,
+    h0=4,
+    lcp=_token_lcp,
+    # kept token slices joined with single spaces: token-grain output
+    # is whitespace-normalized by declaration
+    splice="""
+        array_join(
+          aggregate(
+            spans,
+            named_struct('p', 1, 'acc', CAST(array() AS array<string>)),
+            (a, sp) -> named_struct(
+                'p', CAST(sp.span_end + 1 AS INT),
+                'acc', concat(a.acc, slice(toks, a.p, sp.span_start - a.p))),
+            a -> concat(a.acc, slice(toks, a.p, size(toks) - a.p + 1))
+          ),
+          ' ')
+        """,
+    kw=("max_tokens", "min_tokens", "bucket_tokens"),
+    defaults=(5, 64, 2, 32),
+    tiled=lambda df, col, tile, n: repeat_spans_sa_tokens_tiled(
+        df, "doc_id", col, tile=tile, min_tokens=n
+    ),
+    scores=lambda new, seen, col, cap, n, bk, mb, ia: sa_contamination_scores_tokens(
+        new, seen, "doc_id", col, max_tokens=cap, min_tokens=n,
+        bucket_tokens=bk, max_bucket=mb, full_doc=True, int_alphabet=ia,
+    ),
+    # word-token vocabulary is UNBOUNDED by contract -> "auto" probes
+    # it and int-encodes only when bounded in practice, falling back to
+    # the string-array path otherwise (bit-identical either way)
+    alphabet="auto",
+)
+
+#: BPE pieces: the token grain over the trained piece stream.  The
+#: piece vocabulary is base chars + trained merges by construction, so
+#: "bounded" skips the "auto" sample pre-screen (an extra corpus-scale
+#: probe job that can never fire here; r16 interleaved A/B on the BPE
+#: flagship: 29.09 -> 27.54 s) and keeps the bit-identical fallback.
+_BPE = replace(_TOKEN, defaults=(9, 64, 4, 64), alphabet="bounded", pieces=True)
+
+#: sa_pipeline's ``grain`` option -> adapter
+_GRAINS = {"char": _CHAR, "token": _TOKEN, "bpe": _BPE}
+
+
+def _docs(
+    g: _Grain,
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    max_units: int | None = None,
+) -> DataFrame:
+    """(doc_id, <g.col>): each non-empty doc's units, the first
+    ``max_units`` of them (``None``: the whole doc) — the corpus
+    relation both the rank builder and every LCP re-fetch read, so the
+    two sides always window identically."""
+    t = F.col(text_col)
+    if max_units is None:  # the whole doc; a NULL text is an empty one
+        u = g.units(F.coalesce(t, F.lit("")))
+    else:
+        u = g.slice(g.units(t), 1, max_units)
+    return df.select(F.col(id_col).alias("doc_id"), u.alias(g.col)).filter(
+        g.keep(F.col(g.col))
+    )
+
+
+def _tiled_docs(
+    g: _Grain, df: DataFrame, id_col: str, text_col: str, tile: int, stride: int
+) -> DataFrame:
+    """(doc_id=struct(d, w), <g.col>): each doc split into consecutive
+    ``tile``-unit windows starting every ``stride`` units — the
+    pseudo-doc relation the tiled SA ranks over.  Window count per doc
+    is the smallest W with ``(W-1)*stride + tile >= len``, so windows
+    jointly cover every unit and consecutive windows overlap by
+    ``tile - stride`` units."""
+    units = F.col(g.col)
+    nwin = F.greatest(
+        F.lit(1),
+        (F.ceil((g.size(units) - F.lit(tile)) / F.lit(stride)) + 1).cast("int"),
+    )
+    return _docs(g, df, id_col, text_col).select(
+        "doc_id", F.explode(F.sequence(F.lit(1), nwin)).alias("_w"), g.col
+    ).select(
+        F.struct(F.col("doc_id").alias("d"), F.col("_w").alias("w")).alias(
+            "doc_id"
+        ),
+        g.slice(units, (F.col("_w") - 1) * stride + 1, tile).alias(g.col),
+    )
+
+
+def _suffixes(g: _Grain, docs: DataFrame, width: int) -> DataFrame:
+    """(doc_id, off, suf): every position of ``docs`` with its suffix
+    truncated to ``width`` units."""
+    return docs.select(
+        "doc_id",
+        F.explode(F.sequence(F.lit(1), g.size(F.col(g.col)))).alias("off"),
+        g.col,
+    ).select(
+        "doc_id", "off", g.slice(F.col(g.col), F.col("off"), width).alias("suf")
+    )
+
+
+def _suffix_ranks(g: _Grain, docs: DataFrame, max_units: int) -> DataFrame:
+    """(doc_id, off, rank, m): the grain's round-0 base ranks refined
+    by the shared loop (:func:`_prefix_double`)."""
+    return _prefix_double(g.base(docs, g.h0), max_units, h0=g.h0)
+
+
 def _rep_suffixes(
-    ranks: DataFrame, corpus: DataFrame, unit: str, max_units: int
+    g: _Grain, ranks: DataFrame, docs: DataFrame, max_units: int
 ) -> DataFrame:
     """(rank, m, suf): ONE representative suffix per rank group plus
     the group's multiplicity — group members are identical suffixes,
     so any member represents.  The suffix re-fetches from the corpus
-    relation (``(doc_id, t)`` char grain / ``(doc_id, toks)`` token
-    grain) as a bounded slice; it is never carried through the
+    relation as a bounded slice; it is never carried through the
     doubling loop.
 
     ``ranks`` must carry the loop's ``m`` column (guide §2.4, r15):
@@ -487,19 +611,16 @@ def _rep_suffixes(
         .select("rank", "m", F.col("p.doc_id").alias("doc_id"),
                 F.col("p.off").alias("off"))
     )
-    sliced = (
-        F.expr(f"substring(t, off, {max_units})")
-        if unit == "char"
-        else F.expr(f"slice(toks, off, {max_units})")
-    )
     return (
         singles.unionByName(ties)
-        .join(corpus, "doc_id")
-        .select("rank", "m", sliced.alias("suf"))
+        .join(docs, "doc_id")
+        .select(
+            "rank", "m", g.slice(F.col(g.col), F.col("off"), max_units).alias("suf")
+        )
     )
 
 
-def _adjacent_pairs(suf: DataFrame, unit: str, cap: int = 256) -> DataFrame:
+def _adjacent_pairs(g: _Grain, suf: DataFrame, cap: int) -> DataFrame:
     """One row per rank group, paired with its suffix-order SUCCESSOR
     group and their LCP, built WITHOUT a self-join: with non-dense
     ranks the successor of ``(rank, m)`` sits at exactly ``rank + m``,
@@ -523,36 +644,26 @@ def _adjacent_pairs(suf: DataFrame, unit: str, cap: int = 256) -> DataFrame:
     explode ships the same total bytes through ONE exchange that the
     join shipped through two, ``suf`` is structurally evaluated ONCE,
     and both LCP inputs land in the same aggregate row."""
+
+    def side(key: Column, provider: int) -> Column:
+        return F.struct(
+            key.alias("key"), F.lit(provider).alias("side"), "rank", "m", "suf"
+        )
+
     emit = suf.select(
         F.explode(
-            F.array(
-                F.struct(
-                    F.col("rank").alias("key"),
-                    F.lit(1).alias("side"),
-                    F.col("rank").alias("rank"),
-                    F.col("m").alias("m"),
-                    F.col("suf").alias("suf"),
-                ),
-                F.struct(
-                    (F.col("rank") + F.col("m")).alias("key"),
-                    F.lit(0).alias("side"),
-                    F.col("rank").alias("rank"),
-                    F.col("m").alias("m"),
-                    F.col("suf").alias("suf"),
-                ),
-            )
+            F.array(side(F.col("rank"), 1), side(F.col("rank") + F.col("m"), 0))
         ).alias("x")
     ).select("x.*")
-    lcp = F.expr(_lcp_sql(unit, a="suf2", b="suf", cap=cap))
+    lcp = F.expr(g.lcp("suf2", "suf", cap))
+    picks = [(1, "rank", "rank"), (1, "m", "m"), (1, "suf", "suf"),
+             (0, "rank", "pred_rank"), (0, "suf", "suf2")]
     return (
         emit.groupBy("key")
-        .agg(
-            F.max(F.when(F.col("side") == 1, F.col("rank"))).alias("rank"),
-            F.max(F.when(F.col("side") == 1, F.col("m"))).alias("m"),
-            F.max(F.when(F.col("side") == 1, F.col("suf"))).alias("suf"),
-            F.max(F.when(F.col("side") == 0, F.col("rank"))).alias("pred_rank"),
-            F.max(F.when(F.col("side") == 0, F.col("suf"))).alias("suf2"),
-        )
+        .agg(*[
+            F.max(F.when(F.col("side") == sd, F.col(c))).alias(name)
+            for sd, c, name in picks
+        ])
         .select(
             "rank", "m", "suf", "pred_rank", "suf2",
             F.coalesce(lcp, F.lit(0)).alias("l"),
@@ -560,7 +671,7 @@ def _adjacent_pairs(suf: DataFrame, unit: str, cap: int = 256) -> DataFrame:
     )
 
 
-def _group_dup_lengths(suf: DataFrame, unit: str, cap: int = 256) -> DataFrame:
+def _group_dup_lengths(g: _Grain, suf: DataFrame, cap: int) -> DataFrame:
     """(rank, dup_len): per rank group, the length of the longest WHOLE
     repeated prefix of the group's suffix — the max of the LCPs with
     its two NEIGHBOUR groups in suffix order (non-dense ranks: the
@@ -573,8 +684,7 @@ def _group_dup_lengths(suf: DataFrame, unit: str, cap: int = 256) -> DataFrame:
     ONCE and credited to BOTH endpoint groups, the group's own whole-
     suffix length (``m >= 2``) rides the provider row, and a
     groupBy-max folds the two emissions per group."""
-    size = F.length if unit == "char" else F.size
-    pairs = _adjacent_pairs(suf, unit, cap=cap)
+    pairs = _adjacent_pairs(g, suf, cap)
     per_rank = pairs.select(
         F.explode(
             F.array(
@@ -585,7 +695,9 @@ def _group_dup_lengths(suf: DataFrame, unit: str, cap: int = 256) -> DataFrame:
                     F.col("rank").alias("rank"),
                     F.greatest(
                         F.col("l"),
-                        F.when(F.col("m") >= 2, size("suf")).otherwise(F.lit(0)),
+                        F.when(F.col("m") >= 2, g.size(F.col("suf"))).otherwise(
+                            F.lit(0)
+                        ),
                     ).alias("l"),
                 ),
             )
@@ -594,17 +706,16 @@ def _group_dup_lengths(suf: DataFrame, unit: str, cap: int = 256) -> DataFrame:
     return per_rank.groupBy("rank").agg(F.max("l").alias("dup_len"))
 
 
-def _position_dup_lengths(
-    ranks: DataFrame, corpus: DataFrame, unit: str, max_units: int
-) -> DataFrame:
-    """(doc_id, off, dup_len): per position, the length of the longest
-    whole repeated substring STARTING there — the rank-group dup
-    length (:func:`_group_dup_lengths`) joined back to every member
-    position of the group."""
-    suf = _rep_suffixes(ranks, corpus, unit, max_units)
-    return ranks.join(
-        _group_dup_lengths(suf, unit, cap=max_units), "rank"
-    ).select("doc_id", "off", "dup_len")
+def _position_dup_lengths(g: _Grain, docs: DataFrame, max_units: int) -> DataFrame:
+    """(doc_id, off, dup_len): per position of ``docs``, the length of
+    the longest whole repeated substring STARTING there — the
+    rank-group dup length (:func:`_group_dup_lengths`) joined back to
+    every member position of the group."""
+    ranks = _suffix_ranks(g, docs, max_units)
+    suf = _rep_suffixes(g, ranks, docs, max_units)
+    return ranks.join(_group_dup_lengths(g, suf, max_units), "rank").select(
+        "doc_id", "off", "dup_len"
+    )
 
 
 def _merge_islands(marked: DataFrame) -> DataFrame:
@@ -651,202 +762,35 @@ def _merge_islands(marked: DataFrame) -> DataFrame:
     ).drop("_nxt_ni")
 
 
-def suffix_ranks_tokens(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    max_tokens: int = 64,
+
+def _marks(
+    scored: DataFrame,
+    length: str,
+    min_len: int,
+    start: Column | None = None,
+    doc: str = "doc_id",
 ) -> DataFrame:
-    """TOKEN-grain twin of :func:`suffix_ranks`: positions are
-    whitespace-token indices (``off`` = 1-based token position), the
-    suffix order is lexicographic over TOKENS (each token compared as
-    a string), and the doubling loop is shared verbatim.
-
-    Why a second grain: the position count — which every stage of the
-    doubling loop is linear in — drops by the mean token length (~5-6x
-    on prose) for the same text-window budget, and Lee et al. 2022 run
-    their suffix arrays over BPE tokens for exactly this reason.  The
-    price is granularity: repeats are detected at whole-token
-    boundaries only.
-
-    Round-0 ranks cover the first TWO tokens via a (w1, w2) STRUCT
-    key (see :func:`_token_ranks` for why a joined-string key is
-    unsound).  The token alphabet is VOCABULARY-sized (not
-    charset-sized), so the base prefix sum is the two-level
-    order-preserving device (`_bucketed_rank` in operators/curation.py,
-    same argument): the corpus-sized window partitions by the FIRST
-    token's 2-char prefix (prefix order agrees with pair order), and
-    only the bucket-count offsets (≤ charset² rows) see an
-    unpartitioned window."""
-    return _token_ranks(
-        _token_docs(df, id_col, text_col, max_tokens), max_tokens
-    ).select("doc_id", "off", "rank")
-
-
-def _token_ranks(toks: DataFrame, max_tokens: int) -> DataFrame:
-    """The token-grain rank builder over an already-windowed
-    ``(doc_id, toks)`` relation — ``doc_id`` may be any joinable type
-    (the tiled variant passes a (doc, window) struct).
-
-    Round 0 ranks the first FOUR tokens (h0=4), the token-grain twin
-    of the char path's 8-gram base.  The base key is a STRUCT
-    ``(w1..w4)`` with trailing fields null where the suffix runs out —
-    Spark struct ordering compares field-wise with null-sorts-first,
-    which IS tuple lexicographic order with shorter-suffix-sorts-first
-    (nulls fill monotonically from the end, so a null field always
-    means "suffix ended here"), the exact suffix convention the
-    doubling loop refines.  (A separator-joined string key is NOT
-    sound here: no separator sorts below every possible token byte —
-    whitespace-split tokens can contain control chars below 0x20, even
-    \x00 — so ``w1 || ' ' || w2`` misorders such corpora; the struct
-    comparison has no separator to collide.)  The two-level bucket
-    stays ``substring(w1, 1, 2)`` — prefix order of the FIRST field
-    agrees with tuple order."""
-    pos = toks.select(
-        "doc_id",
-        F.posexplode("toks").alias("off0", "w"),
-        F.col("toks").alias("_tk"),
-    ).select(
-        "doc_id",
-        (F.col("off0") + 1).alias("off"),
-        F.struct(
-            F.col("w").alias("w1"),
-            F.expr("try_element_at(_tk, CAST(off0 + 2 AS INT))").alias("w2"),
-            F.expr("try_element_at(_tk, CAST(off0 + 3 AS INT))").alias("w3"),
-            F.expr("try_element_at(_tk, CAST(off0 + 4 AS INT))").alias("w4"),
-        ).alias("u4"),
-    )
-    return _prefix_double(
-        _two_level_base_ranks(
-            pos, "u4", bucket=F.substring(F.col("u4.w1"), 1, 2)
-        ),
-        max_tokens,
-        h0=4,
+    """(doc_id, s, e): the inclusive unit interval ``[start, start +
+    length - 1]`` of every row whose ``length`` reaches ``min_len`` —
+    the marks :func:`_merge_islands` merges.  ``start`` defaults to
+    the row's ``off``."""
+    s = F.col("off") if start is None else start
+    return scored.filter(F.col(length) >= min_len).select(
+        F.col(doc).alias("doc_id"),
+        s.alias("s"),
+        (s + F.col(length) - 1).alias("e"),
     )
 
 
-def longest_repeated_substrings(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    max_chars: int = 256,
-    min_len: int = 10,
-    top_n: int = 20,
+def _cut_spans(
+    g: _Grain, df: DataFrame, id_col: str, text_col: str, spans: DataFrame
 ) -> DataFrame:
-    """Top-``top_n`` longest substrings (within the first ``max_chars``
-    chars of each doc) that occur at least twice in the corpus —
-    ``(substring, length)`` ordered by (length desc, substring asc).
-
-    Every repeated substring is a prefix of two suffixes adjacent in
-    suffix order, so the candidates are exactly the adjacent-pair LCPs
-    plus the duplicated-suffix groups (rank multiplicity >= 2, LCP =
-    whole suffix).  With non-dense ranks the successor group of
-    ``(rank, m)`` sits at exactly ``rank + m`` — adjacency is that
-    equi-join; the LCP is one bounded ``aggregate()`` cursor per
-    adjacent pair."""
-    docs = _char_docs(df, id_col, text_col, max_chars)
-    ranks = _char_ranks(docs, max_chars)
-    suf = _rep_suffixes(ranks, docs, "char", max_chars)
-    # r15: both candidate families read off ONE _adjacent_pairs relation
-    # (one rep-suffix evaluation instead of three; see _adjacent_pairs).
-    # The pair's LCP prefix is read from the PREDECESSOR side (suf2).
-    pairs = _adjacent_pairs(suf, "char", cap=max_chars)
-    adjacent = pairs.filter(
-        F.col("pred_rank").isNotNull() & F.col("rank").isNotNull()
-    ).select(
-        F.expr("substring(suf2, 1, l)").alias("substring"),
-        F.col("l").alias("length"),
-    )
-    dup_groups = pairs.filter(F.col("m") >= 2).select(
-        F.col("suf").alias("substring"), F.length("suf").alias("length")
-    )
-    return (
-        adjacent.unionByName(dup_groups)
-        .filter(F.col("length") >= min_len)
-        .dropDuplicates(["substring"])
-        .orderBy(F.col("length").desc(), F.col("substring").asc())
-        .limit(top_n)
-    )
-
-
-def repeat_spans_sa(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    max_chars: int = 256,
-    min_len: int = 10,
-) -> DataFrame:
-    """Per-document merged char spans covered by a WHOLE substring of
-    length >= ``min_len`` that occurs at least twice in the corpus —
-    Lee et al. 2022's exact-substring dedup mark, computed from the
-    suffix array (the k-gram span path marks k-gram islands, which may
-    be chimeric; this marks true whole-substring repeats).
-
-    Identity used on both engines: the longest repeated prefix of a
-    suffix equals the max of its LCPs with its two NEIGHBOURS in suffix
-    order (identical suffixes — rank multiplicity >= 2 — repeat whole).
-    Per-position dup lengths are therefore one rank-group join; spans
-    merge with the standard gaps-and-islands cumulative-max window per
-    doc (bounded by the doc's own positions).
-
-    Returns ``(doc_id, span_start, span_end)`` — 1-based, end
-    inclusive, within the first ``max_chars`` chars of each doc.
-    """
-    pos = position_repeat_lengths(df, id_col, text_col, max_chars=max_chars)
-    marked = pos.filter(F.col("dup_len") >= min_len).select(
-        "doc_id",
-        F.col("off").alias("s"),
-        (F.col("off") + F.col("dup_len") - 1).alias("e"),
-    )
-    return _merge_islands(marked)
-
-
-def cut_repeat_spans_sa(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    max_chars: int = 256,
-    min_len: int = 10,
-) -> DataFrame:
-    """End-to-end Lee et al. 2022 exact-substring dedup: cut the
-    per-doc merged spans covered by a WHOLE repeated substring
-    (:func:`repeat_spans_sa`) out of the text and reassemble — the
-    removal half composed with the suffix-array mark half (the k-gram
-    twin is ``operators/dedup.py::cut_duplicate_spans``, which cuts
-    k-gram islands and so can cut chimeras; this cuts only true
-    whole-substring repeats).
-
-    Marks live within the first ``max_chars`` chars (the declared SA
-    window); the tail beyond the window is always kept.  Spans arrive
-    merged and non-overlapping per doc, so the cut is one
-    ``aggregate()`` cursor over the doc's own (few) spans — no
-    per-char explode, no window.  Docs with no marked span pass
-    through unchanged via the left join.
-
-    Returns ``(doc_id, clean_text, n_spans, n_cut)`` — ``n_cut`` =
-    chars removed, deterministic (first-occurrence keeps nothing
-    special: a whole-repeat span is cut in EVERY doc position it
-    covers, exactly Lee et al.'s "remove all but one" simplification to
-    "remove every marked occurrence" at the span grain).
-    """
-    spans = repeat_spans_sa(
-        df, id_col, text_col, max_chars=max_chars, min_len=min_len
-    )
-    return _cut_char_spans(df, id_col, text_col, spans)
-
-
-def _cut_char_spans(
-    df: DataFrame, id_col: str, text_col: str, spans: DataFrame
-) -> DataFrame:
-    """The removal half shared by every char-grain span cutter: merged,
+    """The removal half shared by every span cutter: merged,
     non-overlapping ``(doc_id, span_start, span_end)`` marks collect
-    per doc and ONE ``aggregate()`` cursor splices the kept pieces —
-    no per-char explode, no window; unmarked docs pass through via the
-    left join."""
+    per doc and ONE ``aggregate()`` cursor (the grain's ``splice``)
+    reassembles the kept pieces — no per-unit explode, no window;
+    unmarked docs pass through via the left join.  Returns ``(doc_id,
+    clean_text, n_spans, n_cut)`` with ``n_cut`` in units."""
     per_doc = spans.groupBy("doc_id").agg(
         F.sort_array(F.collect_list(F.struct("span_start", "span_end"))).alias(
             "spans"
@@ -855,19 +799,7 @@ def _cut_char_spans(
     )
     docs = df.select(
         F.col(id_col).alias("doc_id"),
-        F.coalesce(F.col(text_col), F.lit("")).alias("full_t"),
-    )
-    cut = F.expr(
-        """
-        aggregate(
-          spans,
-          named_struct('p', 1, 'acc', ''),
-          (a, sp) -> named_struct(
-              'p', CAST(sp.span_end + 1 AS INT),
-              'acc', concat(a.acc, substring(full_t, a.p, sp.span_start - a.p))),
-          a -> concat(a.acc, substring(full_t, a.p))
-        )
-        """
+        g.units(F.coalesce(F.col(text_col), F.lit(""))).alias(g.col),
     )
     n_cut = F.expr(
         "aggregate(spans, 0, (a, sp) -> a + sp.span_end - sp.span_start + 1)"
@@ -885,163 +817,176 @@ def _cut_char_spans(
         )
         .select(
             "doc_id",
-            cut.alias("clean_text"),
+            F.expr(g.splice).alias("clean_text"),
             F.coalesce("n_spans", F.lit(0)).cast("int").alias("n_spans"),
             n_cut.cast("int").alias("n_cut"),
         )
     )
 
 
-def repeat_spans_sa_tokens(
+def _longest_repeats(
+    g: _Grain,
     df: DataFrame,
     id_col: str,
     text_col: str,
-    *,
-    max_tokens: int = 64,
-    min_tokens: int = 5,
+    max_units: int,
+    min_len: int,
+    top_n: int,
+    name: str,
+    show: Callable[[Column], Column],
 ) -> DataFrame:
-    """TOKEN-grain twin of :func:`repeat_spans_sa`: per-document merged
-    TOKEN spans covered by a whole sequence of >= ``min_tokens``
-    whitespace tokens occurring at least twice in the corpus.  Same
-    neighbour-LCP identity, same gaps-and-islands merge — the LCP
-    cursor compares tokens via ``element_at`` instead of chars, and
-    spans are 1-based token indices (inclusive) within the first
-    ``max_tokens`` tokens of each doc."""
-    toks = _token_docs(df, id_col, text_col, max_tokens)
-    ranks = _token_ranks(toks, max_tokens)
-    pos = _position_dup_lengths(ranks, toks, "token", max_tokens)
-    marked = pos.filter(F.col("dup_len") >= min_tokens).select(
-        "doc_id",
-        F.col("off").alias("s"),
-        (F.col("off") + F.col("dup_len") - 1).alias("e"),
+    """Top-``top_n`` longest unit sequences occurring at least twice,
+    ``(name, length)`` with ``show`` rendering a unit sequence: every
+    repeat is a prefix of two suffixes adjacent in suffix order, so the
+    candidates are the adjacent-pair LCP prefixes plus the duplicated
+    suffix groups (rank multiplicity >= 2, LCP = whole suffix)."""
+    docs = _docs(g, df, id_col, text_col, max_units)
+    suf = _rep_suffixes(g, _suffix_ranks(g, docs, max_units), docs, max_units)
+    # r15: both candidate families read off ONE _adjacent_pairs relation
+    # (one rep-suffix evaluation instead of three; see _adjacent_pairs).
+    # The pair's LCP prefix is read from the PREDECESSOR side (suf2).
+    pairs = _adjacent_pairs(g, suf, max_units)
+    adjacent = pairs.filter(
+        F.col("pred_rank").isNotNull() & F.col("rank").isNotNull()
+    ).select(
+        show(g.slice(F.col("suf2"), 1, F.col("l"))).alias(name),
+        F.col("l").alias("length"),
     )
-    return _merge_islands(marked)
+    dup_groups = pairs.filter(F.col("m") >= 2).select(
+        show(F.col("suf")).alias(name), g.size(F.col("suf")).alias("length")
+    )
+    return (
+        adjacent.unionByName(dup_groups)
+        .filter(F.col("length") >= min_len)
+        .dropDuplicates([name])
+        .orderBy(F.col("length").desc(), F.col(name).asc())
+        .limit(top_n)
+    )
 
 
-def sa_contamination_scores(
+def _repeat_spans(
+    g: _Grain,
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    max_units: int,
+    min_len: int,
+) -> DataFrame:
+    """Merged (doc_id, span_start, span_end) unit spans, within the
+    first ``max_units`` units of each doc, covered by a whole repeat of
+    >= ``min_len`` units."""
+    docs = _docs(g, df, id_col, text_col, max_units)
+    return _merge_islands(
+        _marks(_position_dup_lengths(g, docs, max_units), "dup_len", min_len)
+    )
+
+
+def _tiled_repeat_spans(
+    g: _Grain, df: DataFrame, id_col: str, text_col: str, tile: int, min_len: int
+) -> DataFrame:
+    """Full-document :func:`_repeat_spans`: ranks ``tile``-unit windows
+    overlapping by ``min_len - 1`` units (see
+    :func:`repeat_spans_sa_tiled` for why tiling loses nothing) and
+    maps marks back to absolute unit offsets of the real doc."""
+    if min_len < 2 or min_len > tile:
+        raise ValueError(
+            f"need 2 <= {g.kw[1]} <= tile, got {g.kw[1]}={min_len} tile={tile}"
+        )
+    stride = tile - (min_len - 1)
+    wdocs = _tiled_docs(g, df, id_col, text_col, tile, stride)
+    pos = _position_dup_lengths(g, wdocs, tile)
+    base = (F.col("doc_id.w") - 1) * stride + F.col("off")
+    return _merge_islands(
+        _marks(pos, "dup_len", min_len, start=base, doc="doc_id.d")
+    )
+
+
+def _contamination_scores(
+    g: _Grain,
     new: DataFrame,
     seen: DataFrame,
     id_col: str,
     text_col: str,
-    *,
-    max_chars: int = 128,
-    min_len: int = 30,
-    bucket_len: int = 8,
-    max_bucket: int | None = 10_000,
-    full_doc: bool = False,
+    max_units: int,
+    min_len: int,
+    bucket: int,
+    max_bucket: int | None,
+    full_doc: bool,
+    int_alphabet: bool | str = False,
+    max_alphabet: int = 4096,
 ) -> DataFrame:
-    """(doc_id, off, m): per ARRIVING suffix position, the length of
-    the longest prefix it shares with ANY seen suffix — the raw
-    per-position relation behind
-    :func:`sa_incremental_contamination` (which doc-maxes it) and the
-    contamination-evidence report (which needs ``off`` to excerpt the
-    leaked run).  Semantics, bucketing and the declared sub-bucket
-    grain are documented on the doc-grain wrapper.
-
-    OUTPUT CONTRACT: positions whose prefix bucket holds NO seen
-    suffix are OMITTED, not emitted with ``m = 0`` (the exact arrival
-    prefilter — their score is provably 0, below every decision
-    threshold).  Consumers must therefore treat a missing position as
-    ``m = 0``: filter on ``m >= min_len`` (absent rows cannot
-    qualify) or doc-max through a LEFT join from the arrivals with
-    ``coalesce(0)`` — never count rows or average ``m`` over this
-    relation as if it were position-complete.
-
-    ``full_doc=True`` scans EVERY position of every doc on both sides
-    (no head window — a leak at char 500 is found); ``max_chars`` then
-    bounds only the per-suffix COMPARE length, which is sound for the
-    >= ``min_len`` decision because truncating both sides at any
-    ``L >= min_len`` preserves "shared prefix >= min_len" exactly — it
-    merely caps the reported ``m`` at ``L`` (so positions inside a
-    longer run chain overlapping caps; the span union still covers the
-    whole run).  Unlike the repeat-spans family, full-document
-    contamination needs NO window tiling: no suffix array is built —
-    arrivals compare directly against seen neighbours per prefix
-    bucket.
-
-    ``max_bucket`` is the standard hot-bucket cap every LSH-family
-    operator here carries: a prefix bucket holding more than
-    ``max_bucket`` DISTINCT seen suffixes (corpus-wide boilerplate —
-    every doc opening with the same ``bucket_len`` chars) is dropped
-    from the seen side BEFORE the per-bucket windows, so its width
-    never lands on one task; arrivals in a dropped bucket read as
-    uncontaminated there.  Never silent: the count of dropped buckets
-    rides the plan as an ``observe`` metric
-    (``sa_ingest_<n>/dropped_hot_buckets``), and the oracle mirrors
-    the cap with a HAVING on the same bucket grain.  Raise
-    ``bucket_len`` toward ``min_len`` to split hot buckets before
-    resorting to a higher cap; ``None`` disables.
-
-    The ARRIVAL side needs no cap: hot arrival buckets are split into
-    salt sub-groups (seen rows replicated into each, so pred/succ —
-    seen-only aggregates — are bit-identical to the unsalted window;
-    no oracle mirror needed) and the per-task window partition is
-    bounded by ``max_bucket`` seen + ``max_bucket`` new rows.  Salted
-    bucket count rides the ``sa_arrivals_<n>/
-    salted_hot_arrival_buckets`` observe metric; planted test:
-    tests/test_span_winnowing.py::test_sa_arrival_hot_bucket_salting."""
-    if bucket_len > min_len:
+    """(doc_id, off, m): the contamination scorer's front end — both
+    sides' suffixes (head window, or every position when ``full_doc``)
+    bucketed by their first ``bucket`` units, then the shared
+    neighbour core (:func:`_neighbour_scores`).  Contract and
+    semantics on :func:`sa_contamination_scores`."""
+    mx, mn, bk = g.kw
+    if bucket > min_len:
         raise ValueError(
-            f"bucket_len ({bucket_len}) must be <= min_len ({min_len}): "
-            "cross-bucket neighbours have LCP < bucket_len, so a wider "
-            "bucket would silently miss qualifying matches"
+            f"{bk} ({bucket}) must be <= {mn} ({min_len}): cross-bucket "
+            f"neighbours share fewer than {bk} units, so a wider bucket "
+            "would silently miss qualifying matches"
         )
-    if full_doc and max_chars < min_len:
+    if full_doc and max_units < min_len:
         raise ValueError(
-            f"full_doc compare length max_chars ({max_chars}) must be >= "
-            f"min_len ({min_len}): a shorter compare window could not "
+            f"full_doc compare length {mx} ({max_units}) must be >= "
+            f"{mn} ({min_len}): a shorter compare window could not "
             "certify a qualifying match"
         )
-
-    def _sufs(df: DataFrame) -> DataFrame:
-        t = (
-            F.coalesce(F.col(text_col), F.lit(""))
-            if full_doc
-            else F.substring(F.col(text_col), 1, max_chars)
+    window = None if full_doc else max_units
+    new_docs = _docs(g, new, id_col, text_col, window)
+    seen_docs = _docs(g, seen, id_col, text_col, window)
+    if int_alphabet:
+        # array<int> suffixes shuffle/sort/compare several times
+        # cheaper than array<string> (measured 24.5 -> 10.8 s on the
+        # BPE flagship's scorer stage at sf0.1) with bit-identical
+        # output — see _int_alphabet_encode for the soundness argument
+        # and the bounded-vocabulary contract.  int_alphabet=True
+        # asserts boundedness (raises past max_alphabet);
+        # int_alphabet="auto" probes and falls back to the string
+        # path when the vocabulary exceeds the cap — for callers
+        # (word-token grain) whose alphabet is unbounded BY CONTRACT
+        # but often bounded in practice; both paths are bit-identical
+        # so the choice is invisible to every consumer and oracle.
+        # int_alphabet="bounded" is "auto" minus the sample
+        # pre-screen: for callers whose vocabulary is bounded by
+        # construction (BPE pieces <= base chars + trained merges) the
+        # pre-screen can never fire, so it is skipped — same soft
+        # fallback, same execution-time unmapped-token guard (r16).
+        enc = _int_alphabet_encode(
+            [new_docs, seen_docs], max_alphabet,
+            soft=(int_alphabet in ("auto", "bounded")),
+            sample_screen=(int_alphabet != "bounded"),
         )
-        docs = df.select(
-            F.col(id_col).alias("doc_id"), t.alias("t")
-        ).filter(F.length("t") > 0)
-        return (
-            docs.select(
-                "doc_id",
-                F.explode(F.expr("sequence(1, length(t))")).alias("off"),
-                "t",
-            )
-            .select(
-                "doc_id",
-                F.col("off").cast("int").alias("off"),
-                F.expr(f"substring(t, off, {max_chars})").alias("suf"),
-            )
-        )
-
-    new_suf = _sufs(new).withColumn("_bk", F.substring("suf", 1, bucket_len))
+        if enc is not None:
+            new_docs, seen_docs = enc
+    prefix = g.slice(F.col("suf"), 1, bucket)
+    new_suf = _suffixes(g, new_docs, max_units).withColumn("_bk", prefix)
     seen_suf = (
-        _sufs(seen)
+        _suffixes(g, seen_docs, max_units)
         .select("suf")
         .distinct()
-        .withColumn("_bk", F.substring("suf", 1, bucket_len))
+        .withColumn("_bk", prefix)
     )
     return _neighbour_scores(
-        new_suf, seen_suf, max_bucket=max_bucket, unit="char",
-        cap=max_chars,
+        g, new_suf, seen_suf, max_bucket=max_bucket, cap=max_units
     )
 
 
 def _neighbour_scores(
+    g: _Grain,
     new_suf: DataFrame,
     seen_suf: DataFrame,
     *,
     max_bucket: int | None,
-    unit: str,
-    cap: int = 256,
+    cap: int,
 ) -> DataFrame:
-    """The unit-agnostic scoring core shared by the char and token
-    contamination scorers: seen-side hot-bucket cap (+ observe),
-    arrival prefilter to seen-occupied buckets, exact arrival salting,
-    ONE window per (bucket, salt) for the seen neighbours, bounded LCP
-    cursors.  ``new_suf`` is ``(doc_id, off, suf, _bk)``, ``seen_suf``
-    is distinct ``(suf, _bk)``; ``suf`` is a string (char grain) or an
+    """The grain-generic scoring core of the contamination scorers:
+    seen-side hot-bucket cap (+ observe), arrival prefilter to
+    seen-occupied buckets, exact arrival salting, ONE window per
+    (bucket, salt) for the seen neighbours, bounded LCP cursors.
+    ``new_suf`` is ``(doc_id, off, suf, _bk)``, ``seen_suf`` is
+    distinct ``(suf, _bk)``; ``suf`` is a string (char grain) or an
     array (token grain — Spark array ordering is lexicographic with
     shorter-prefix-first, the exact suffix convention)."""
     from chewdata_spark.operators.dedup import _OBS_SEQ
@@ -1143,11 +1088,7 @@ def _neighbour_scores(
         F.explode(F.expr("sequence(0, _ns - 1)")).alias("_salt"),
     )
     new_in = new_suf.join(salts_plain, "_bk").select(
-        "doc_id",
-        "off",
-        "suf",
-        "_bk",
-        F.lit(0).alias("_seen"),
+        "doc_id", "off", "suf", "_bk", F.lit(0).alias("_seen"),
         F.pmod(F.xxhash64("doc_id", "off"), F.col("_ns"))
         .cast("int")
         .alias("_salt"),
@@ -1172,16 +1113,12 @@ def _neighbour_scores(
         .select(
             "doc_id",
             "off",
-            F.greatest(
+            F.greatest(*[
                 F.when(
-                    F.col("_pred").isNotNull(),
-                    F.expr(_lcp_sql(unit, b="_pred", cap=cap)),
-                ).otherwise(0),
-                F.when(
-                    F.col("_succ").isNotNull(),
-                    F.expr(_lcp_sql(unit, b="_succ", cap=cap)),
-                ).otherwise(0),
-            ).cast("int").alias("m"),
+                    F.col(nb).isNotNull(), F.expr(g.lcp(b=nb, cap=cap))
+                ).otherwise(0)
+                for nb in ("_pred", "_succ")
+            ]).cast("int").alias("m"),
         )
     )
 
@@ -1213,10 +1150,7 @@ def _int_alphabet_encode(
     exceeding it raises instead of silently shipping a giant literal
     map through codegen.  Unbounded vocabularies (whitespace word
     tokens at corpus scale) must stay on the string path."""
-    vocab = None
-    for toks in sides:
-        v = toks.select(F.explode("toks").alias("_tok"))
-        vocab = v if vocab is None else vocab.unionByName(v)
+    vocab = _union([t.select(F.explode("toks").alias("_tok")) for t in sides])
     if soft and sample_screen:
         # cheap pre-screen for the decline path: if a 2% sample's
         # vocabulary already exceeds the cap, the full vocabulary does
@@ -1287,6 +1221,254 @@ def _apply_int_dictionary(
     )
 
 
+def _doc_gate(
+    scored: DataFrame, new: DataFrame, id_col: str, min_len: int, out: str
+) -> DataFrame:
+    """The doc-grain contamination gate over a position scorer's
+    output: one row per ARRIVING doc, ``(doc_id, <out>, kept)`` —
+    left-join pass-through of every arrival, coalesce-to-0 for docs
+    the scorer omitted, strict ``<`` threshold."""
+    per_doc = scored.groupBy("doc_id").agg(F.max("m").cast("int").alias(out))
+    best = F.coalesce(out, F.lit(0))
+    arriving = new.select(F.col(id_col).alias("doc_id"))
+    return arriving.join(per_doc, "doc_id", "left").select(
+        "doc_id", best.alias(out), (best < min_len).alias("kept")
+    )
+
+
+def suffix_ranks(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    *,
+    max_chars: int = 256,
+) -> DataFrame:
+    """(doc_id, off, rank): the corpus suffix array as a rank relation —
+    ``rank`` is the NON-DENSE 1-based position rank of suffix
+    ``text[off:]`` in the sorted order of ALL suffixes (``1 +
+    #positions with a strictly smaller suffix``; identical suffixes
+    share a rank, and the next distinct suffix sits at ``rank + m``).
+
+    ISA-style prefix doubling: each round splits tie groups in place —
+    ``rank(p) = 1 + #smaller`` is invariant under refinement, because a
+    group member with k in-group predecessors under ``nxt`` gains
+    exactly k newly-smaller positions, so ``rank += rank() - 1``
+    windowed WITHIN the group is the whole update.  Singleton groups
+    are final and leave the working set; every window partitions by
+    the previous rank; an eager localCheckpoint per round truncates the
+    iterative lineage (and flags the query construct-each for bench)."""
+    return _suffix_ranks(
+        _CHAR, _docs(_CHAR, df, id_col, text_col, max_chars), max_chars
+    ).select("doc_id", "off", "rank")
+
+
+def suffix_ranks_tokens(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    *,
+    max_tokens: int = 64,
+) -> DataFrame:
+    """TOKEN-grain twin of :func:`suffix_ranks`: positions are
+    whitespace-token indices (``off`` = 1-based token position), the
+    suffix order is lexicographic over TOKENS (each token compared as
+    a string), and the doubling loop is shared verbatim.
+
+    Why a second grain: the position count — which every stage of the
+    doubling loop is linear in — drops by the mean token length (~5-6x
+    on prose) for the same text-window budget, and Lee et al. 2022 run
+    their suffix arrays over BPE tokens for exactly this reason.  The
+    price is granularity: repeats are detected at whole-token
+    boundaries only.
+
+    Round-0 ranks cover the first TWO tokens via a (w1, w2) STRUCT
+    key (see :func:`_token_ranks` for why a joined-string key is
+    unsound).  The token alphabet is VOCABULARY-sized (not
+    charset-sized), so the base prefix sum is the two-level
+    order-preserving device (`_bucketed_rank` in operators/curation.py,
+    same argument): the corpus-sized window partitions by the FIRST
+    token's 2-char prefix (prefix order agrees with pair order), and
+    only the bucket-count offsets (≤ charset² rows) see an
+    unpartitioned window."""
+    return _suffix_ranks(
+        _TOKEN, _docs(_TOKEN, df, id_col, text_col, max_tokens), max_tokens
+    ).select("doc_id", "off", "rank")
+
+
+def longest_repeated_substrings(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    *,
+    max_chars: int = 256,
+    min_len: int = 10,
+    top_n: int = 20,
+) -> DataFrame:
+    """Top-``top_n`` longest substrings (within the first ``max_chars``
+    chars of each doc) that occur at least twice in the corpus —
+    ``(substring, length)`` ordered by (length desc, substring asc).
+
+    Every repeated substring is a prefix of two suffixes adjacent in
+    suffix order, so the candidates are exactly the adjacent-pair LCPs
+    plus the duplicated-suffix groups (rank multiplicity >= 2, LCP =
+    whole suffix).  With non-dense ranks the successor group of
+    ``(rank, m)`` sits at exactly ``rank + m`` — adjacency is that
+    equi-join; the LCP is one bounded ``aggregate()`` cursor per
+    adjacent pair."""
+    return _longest_repeats(
+        _CHAR, df, id_col, text_col, max_chars, min_len, top_n,
+        "substring", lambda c: c,
+    )
+
+
+def repeat_spans_sa(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    *,
+    max_chars: int = 256,
+    min_len: int = 10,
+) -> DataFrame:
+    """Per-document merged char spans covered by a WHOLE substring of
+    length >= ``min_len`` that occurs at least twice in the corpus —
+    Lee et al. 2022's exact-substring dedup mark, computed from the
+    suffix array (the k-gram span path marks k-gram islands, which may
+    be chimeric; this marks true whole-substring repeats).
+
+    Identity used on both engines: the longest repeated prefix of a
+    suffix equals the max of its LCPs with its two NEIGHBOURS in suffix
+    order (identical suffixes — rank multiplicity >= 2 — repeat whole).
+    Per-position dup lengths are therefore one rank-group join; spans
+    merge with the standard gaps-and-islands cumulative-max window per
+    doc (bounded by the doc's own positions).
+
+    Returns ``(doc_id, span_start, span_end)`` — 1-based, end
+    inclusive, within the first ``max_chars`` chars of each doc.
+    """
+    return _repeat_spans(_CHAR, df, id_col, text_col, max_chars, min_len)
+
+
+def cut_repeat_spans_sa(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    *,
+    max_chars: int = 256,
+    min_len: int = 10,
+) -> DataFrame:
+    """End-to-end Lee et al. 2022 exact-substring dedup: cut the
+    per-doc merged spans covered by a WHOLE repeated substring
+    (:func:`repeat_spans_sa`) out of the text and reassemble — the
+    removal half composed with the suffix-array mark half (the k-gram
+    twin is ``operators/dedup.py::cut_duplicate_spans``, which cuts
+    k-gram islands and so can cut chimeras; this cuts only true
+    whole-substring repeats).
+
+    Marks live within the first ``max_chars`` chars (the declared SA
+    window); the tail beyond the window is always kept.  Spans arrive
+    merged and non-overlapping per doc, so the cut is one
+    ``aggregate()`` cursor over the doc's own (few) spans — no
+    per-char explode, no window.  Docs with no marked span pass
+    through unchanged via the left join.
+
+    Returns ``(doc_id, clean_text, n_spans, n_cut)`` — ``n_cut`` =
+    chars removed, deterministic (first-occurrence keeps nothing
+    special: a whole-repeat span is cut in EVERY doc position it
+    covers, exactly Lee et al.'s "remove all but one" simplification to
+    "remove every marked occurrence" at the span grain).
+    """
+    spans = repeat_spans_sa(
+        df, id_col, text_col, max_chars=max_chars, min_len=min_len
+    )
+    return _cut_spans(_CHAR, df, id_col, text_col, spans)
+
+
+def repeat_spans_sa_tokens(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    *,
+    max_tokens: int = 64,
+    min_tokens: int = 5,
+) -> DataFrame:
+    """TOKEN-grain twin of :func:`repeat_spans_sa`: per-document merged
+    TOKEN spans covered by a whole sequence of >= ``min_tokens``
+    whitespace tokens occurring at least twice in the corpus.  Same
+    neighbour-LCP identity, same gaps-and-islands merge — the LCP
+    cursor compares tokens via ``element_at`` instead of chars, and
+    spans are 1-based token indices (inclusive) within the first
+    ``max_tokens`` tokens of each doc."""
+    return _repeat_spans(_TOKEN, df, id_col, text_col, max_tokens, min_tokens)
+
+
+def sa_contamination_scores(
+    new: DataFrame,
+    seen: DataFrame,
+    id_col: str,
+    text_col: str,
+    *,
+    max_chars: int = 128,
+    min_len: int = 30,
+    bucket_len: int = 8,
+    max_bucket: int | None = 10_000,
+    full_doc: bool = False,
+) -> DataFrame:
+    """(doc_id, off, m): per ARRIVING suffix position, the length of
+    the longest prefix it shares with ANY seen suffix — the raw
+    per-position relation behind
+    :func:`sa_incremental_contamination` (which doc-maxes it) and the
+    contamination-evidence report (which needs ``off`` to excerpt the
+    leaked run).  Semantics, bucketing and the declared sub-bucket
+    grain are documented on the doc-grain wrapper.
+
+    OUTPUT CONTRACT: positions whose prefix bucket holds NO seen
+    suffix are OMITTED, not emitted with ``m = 0`` (the exact arrival
+    prefilter — their score is provably 0, below every decision
+    threshold).  Consumers must therefore treat a missing position as
+    ``m = 0``: filter on ``m >= min_len`` (absent rows cannot
+    qualify) or doc-max through a LEFT join from the arrivals with
+    ``coalesce(0)`` — never count rows or average ``m`` over this
+    relation as if it were position-complete.
+
+    ``full_doc=True`` scans EVERY position of every doc on both sides
+    (no head window — a leak at char 500 is found); ``max_chars`` then
+    bounds only the per-suffix COMPARE length, which is sound for the
+    >= ``min_len`` decision because truncating both sides at any
+    ``L >= min_len`` preserves "shared prefix >= min_len" exactly — it
+    merely caps the reported ``m`` at ``L`` (so positions inside a
+    longer run chain overlapping caps; the span union still covers the
+    whole run).  Unlike the repeat-spans family, full-document
+    contamination needs NO window tiling: no suffix array is built —
+    arrivals compare directly against seen neighbours per prefix
+    bucket.
+
+    ``max_bucket`` is the standard hot-bucket cap every LSH-family
+    operator here carries: a prefix bucket holding more than
+    ``max_bucket`` DISTINCT seen suffixes (corpus-wide boilerplate —
+    every doc opening with the same ``bucket_len`` chars) is dropped
+    from the seen side BEFORE the per-bucket windows, so its width
+    never lands on one task; arrivals in a dropped bucket read as
+    uncontaminated there.  Never silent: the count of dropped buckets
+    rides the plan as an ``observe`` metric
+    (``sa_ingest_<n>/dropped_hot_buckets``), and the oracle mirrors
+    the cap with a HAVING on the same bucket grain.  Raise
+    ``bucket_len`` toward ``min_len`` to split hot buckets before
+    resorting to a higher cap; ``None`` disables.
+
+    The ARRIVAL side needs no cap: hot arrival buckets are split into
+    salt sub-groups (seen rows replicated into each, so pred/succ —
+    seen-only aggregates — are bit-identical to the unsalted window;
+    no oracle mirror needed) and the per-task window partition is
+    bounded by ``max_bucket`` seen + ``max_bucket`` new rows.  Salted
+    bucket count rides the ``sa_arrivals_<n>/
+    salted_hot_arrival_buckets`` observe metric; planted test:
+    tests/test_span_winnowing.py::test_sa_arrival_hot_bucket_salting."""
+    return _contamination_scores(
+        _CHAR, new, seen, id_col, text_col,
+        max_chars, min_len, bucket_len, max_bucket, full_doc,
+    )
+
+
 def sa_contamination_scores_tokens(
     new: DataFrame,
     seen: DataFrame,
@@ -1318,83 +1500,10 @@ def sa_contamination_scores_tokens(
     position with ``max_tokens`` as the per-suffix COMPARE cap (sound
     for the >= ``min_tokens`` decision by the same truncation argument
     as the char scorer)."""
-    if bucket_tokens > min_tokens:
-        raise ValueError(
-            f"bucket_tokens ({bucket_tokens}) must be <= min_tokens "
-            f"({min_tokens}): cross-bucket neighbours share fewer than "
-            "bucket_tokens tokens, so a wider bucket would silently "
-            "miss qualifying matches"
-        )
-    if full_doc and max_tokens < min_tokens:
-        raise ValueError(
-            f"full_doc compare length max_tokens ({max_tokens}) must be "
-            f">= min_tokens ({min_tokens})"
-        )
-
-    def _toks(df: DataFrame) -> DataFrame:
-        if full_doc:
-            return (
-                df.select(
-                    F.col(id_col).alias("doc_id"),
-                    F.split(
-                        F.trim(F.coalesce(F.col(text_col), F.lit(""))),
-                        r"\s+",
-                    ).alias("toks"),
-                )
-                .filter(
-                    (F.size("toks") > 1) | (F.element_at("toks", 1) != "")
-                )
-            )
-        return _token_docs(df, id_col, text_col, max_tokens)
-
-    new_toks, seen_toks = _toks(new), _toks(seen)
-    if int_alphabet:
-        # array<int> suffixes shuffle/sort/compare several times
-        # cheaper than array<string> (measured 24.5 -> 10.8 s on the
-        # BPE flagship's scorer stage at sf0.1) with bit-identical
-        # output — see _int_alphabet_encode for the soundness argument
-        # and the bounded-vocabulary contract.  int_alphabet=True
-        # asserts boundedness (raises past max_alphabet);
-        # int_alphabet="auto" probes and falls back to the string
-        # path when the vocabulary exceeds the cap — for callers
-        # (word-token grain) whose alphabet is unbounded BY CONTRACT
-        # but often bounded in practice; both paths are bit-identical
-        # so the choice is invisible to every consumer and oracle.
-        # int_alphabet="bounded" is "auto" minus the sample
-        # pre-screen: for callers whose vocabulary is bounded by
-        # construction (BPE pieces <= base chars + trained merges) the
-        # pre-screen can never fire, so it is skipped — same soft
-        # fallback, same execution-time unmapped-token guard (r16).
-        enc = _int_alphabet_encode(
-            [new_toks, seen_toks], max_alphabet,
-            soft=(int_alphabet in ("auto", "bounded")),
-            sample_screen=(int_alphabet != "bounded"),
-        )
-        if enc is not None:
-            new_toks, seen_toks = enc
-
-    def _sufs(toks: DataFrame) -> DataFrame:
-        return toks.select(
-            "doc_id",
-            F.explode(F.expr("sequence(1, size(toks))")).alias("off"),
-            "toks",
-        ).select(
-            "doc_id",
-            F.col("off").cast("int").alias("off"),
-            F.expr(f"slice(toks, off, {max_tokens})").alias("suf"),
-        )
-
-    new_suf = _sufs(new_toks).withColumn(
-        "_bk", F.expr(f"slice(suf, 1, {bucket_tokens})")
-    )
-    seen_suf = (
-        _sufs(seen_toks)
-        .select("suf")
-        .distinct()
-        .withColumn("_bk", F.expr(f"slice(suf, 1, {bucket_tokens})"))
-    )
-    return _neighbour_scores(
-        new_suf, seen_suf, max_bucket=max_bucket, unit="token"
+    return _contamination_scores(
+        _TOKEN, new, seen, id_col, text_col,
+        max_tokens, min_tokens, bucket_tokens, max_bucket, full_doc,
+        int_alphabet, max_alphabet,
     )
 
 
@@ -1420,24 +1529,12 @@ def sa_incremental_contamination_tokens(
     docs the position scorer omitted, strict ``<`` threshold) so the
     token and BPE queries cannot drift from each other — scoring
     semantics on :func:`sa_contamination_scores_tokens`."""
-    scored = sa_contamination_scores_tokens(
-        new, seen, id_col, text_col,
-        max_tokens=max_tokens, min_tokens=min_tokens,
-        bucket_tokens=bucket_tokens, max_bucket=max_bucket,
-        full_doc=full_doc,
-        int_alphabet=int_alphabet, max_alphabet=max_alphabet,
+    scored = _contamination_scores(
+        _TOKEN, new, seen, id_col, text_col,
+        max_tokens, min_tokens, bucket_tokens, max_bucket, full_doc,
+        int_alphabet, max_alphabet,
     )
-    per_doc = scored.groupBy("doc_id").agg(
-        F.max("m").cast("int").alias("max_shared_tokens")
-    )
-    arriving = new.select(F.col(id_col).alias("doc_id"))
-    return arriving.join(per_doc, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("max_shared_tokens", F.lit(0)).alias("max_shared_tokens"),
-        (F.coalesce("max_shared_tokens", F.lit(0)) < min_tokens).alias(
-            "kept"
-        ),
-    )
+    return _doc_gate(scored, new, id_col, min_tokens, "max_shared_tokens")
 
 
 def cut_contaminated_spans_sa_tokens(
@@ -1462,19 +1559,13 @@ def cut_contaminated_spans_sa_tokens(
     :func:`sa_contamination_scores_tokens`; merge + cut reuse the
     shared island/splice devices.  Returns ``(doc_id, clean_text,
     n_spans, n_cut)`` with ``n_cut`` in TOKENS."""
-    scored = sa_contamination_scores_tokens(
-        new, seen, id_col, text_col,
-        max_tokens=max_tokens, min_tokens=min_tokens,
-        bucket_tokens=bucket_tokens, max_bucket=max_bucket,
-        full_doc=full_doc,
-        int_alphabet=int_alphabet, max_alphabet=max_alphabet,
+    scored = _contamination_scores(
+        _TOKEN, new, seen, id_col, text_col,
+        max_tokens, min_tokens, bucket_tokens, max_bucket, full_doc,
+        int_alphabet, max_alphabet,
     )
-    marked = scored.filter(F.col("m") >= min_tokens).select(
-        "doc_id",
-        F.col("off").alias("s"),
-        (F.col("off") + F.col("m") - 1).alias("e"),
-    )
-    return _cut_token_spans(new, id_col, text_col, _merge_islands(marked))
+    spans = _merge_islands(_marks(scored, "m", min_tokens))
+    return _cut_spans(_TOKEN, new, id_col, text_col, spans)
 
 
 def sa_incremental_contamination(
@@ -1518,23 +1609,11 @@ def sa_incremental_contamination(
     cost: new positions + seen suffixes in TOUCHED buckets only
     (semi-join); per-batch, idempotent, history never re-ranked.
     """
-    scored = sa_contamination_scores(
-        new, seen, id_col, text_col,
-        max_chars=max_chars, min_len=min_len, bucket_len=bucket_len,
-        max_bucket=max_bucket, full_doc=full_doc,
+    scored = _contamination_scores(
+        _CHAR, new, seen, id_col, text_col,
+        max_chars, min_len, bucket_len, max_bucket, full_doc,
     )
-    per_doc = scored.groupBy("doc_id").agg(
-        F.max("m").cast("int").alias("max_shared_len")
-    )
-    arriving = new.select(F.col(id_col).alias("doc_id"))
-    return (
-        arriving.join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("max_shared_len", F.lit(0)).alias("max_shared_len"),
-            (F.coalesce("max_shared_len", F.lit(0)) < min_len).alias("kept"),
-        )
-    )
+    return _doc_gate(scored, new, id_col, min_len, "max_shared_len")
 
 
 def cut_repeat_spans_sa_tokens(
@@ -1563,64 +1642,7 @@ def cut_repeat_spans_sa_tokens(
     spans = repeat_spans_sa_tokens(
         df, id_col, text_col, max_tokens=max_tokens, min_tokens=min_tokens
     )
-    return _cut_token_spans(df, id_col, text_col, spans)
-
-
-def _cut_token_spans(
-    df: DataFrame, id_col: str, text_col: str, spans: DataFrame
-) -> DataFrame:
-    """The removal half shared by the token-grain span cutters: merged
-    ``(doc_id, span_start, span_end)`` TOKEN marks collect per doc and
-    ONE ``aggregate()`` cursor splices the kept token slices, joined
-    with single spaces (whitespace-normalized by the token-grain
-    contract); unmarked docs pass through the left join."""
-    per_doc = spans.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list(F.struct("span_start", "span_end"))).alias(
-            "spans"
-        ),
-        F.count(F.lit(1)).cast("int").alias("n_spans"),
-    )
-    docs = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+").alias(
-            "toks"
-        ),
-    )
-    cut = F.expr(
-        """
-        array_join(
-          aggregate(
-            spans,
-            named_struct('p', 1, 'acc', CAST(array() AS array<string>)),
-            (a, sp) -> named_struct(
-                'p', CAST(sp.span_end + 1 AS INT),
-                'acc', concat(a.acc, slice(toks, a.p, sp.span_start - a.p))),
-            a -> concat(a.acc, slice(toks, a.p, size(toks) - a.p + 1))
-          ),
-          ' ')
-        """
-    )
-    n_cut = F.expr(
-        "aggregate(spans, 0, (a, sp) -> a + sp.span_end - sp.span_start + 1)"
-    )
-    return (
-        docs.join(per_doc, "doc_id", "left")
-        .withColumn(
-            "spans",
-            F.coalesce(
-                "spans",
-                F.expr(
-                    "CAST(array() AS array<struct<span_start:int,span_end:int>>)"
-                ),
-            ),
-        )
-        .select(
-            "doc_id",
-            cut.alias("clean_text"),
-            F.coalesce("n_spans", F.lit(0)).cast("int").alias("n_spans"),
-            n_cut.cast("int").alias("n_cut"),
-        )
-    )
+    return _cut_spans(_TOKEN, df, id_col, text_col, spans)
 
 
 def position_repeat_lengths(
@@ -1637,11 +1659,8 @@ def position_repeat_lengths(
     exposed unfiltered so threshold-tuning queries can histogram it:
     picking Lee et al.'s ``min_len`` IS a corpus measurement, not a
     constant.  Same neighbour-LCP identity, one rank-group join."""
-    docs = _char_docs(df, id_col, text_col, max_chars)
-    ranks = _char_ranks(docs, max_chars)
-    return _position_dup_lengths(ranks, docs, "char", max_chars).select(
-        "doc_id", "off", F.col("dup_len").cast("int").alias("dup_len")
-    )
+    docs = _docs(_CHAR, df, id_col, text_col, max_chars)
+    return _position_dup_lengths(_CHAR, docs, max_chars)
 
 
 def longest_repeated_sequences_tokens(
@@ -1660,55 +1679,9 @@ def longest_repeated_sequences_tokens(
     candidates as the char version — adjacent-group LCP prefixes plus
     whole duplicated suffixes (rank multiplicity >= 2) — ordered by
     (length desc, sequence asc)."""
-    toks = _token_docs(df, id_col, text_col, max_tokens)
-    ranks = _token_ranks(toks, max_tokens)
-    suf = _rep_suffixes(ranks, toks, "token", max_tokens)
-    # r15: both candidate families read off ONE _adjacent_pairs relation
-    # (one rep-suffix evaluation instead of three; see _adjacent_pairs).
-    pairs = _adjacent_pairs(suf, "token", cap=max_tokens)
-    adjacent = pairs.filter(
-        F.col("pred_rank").isNotNull() & F.col("rank").isNotNull()
-    ).select(
-        F.array_join(F.expr("slice(suf2, 1, l)"), " ").alias("seq"),
-        F.col("l").alias("length"),
-    )
-    dup_groups = pairs.filter(F.col("m") >= 2).select(
-        F.array_join("suf", " ").alias("seq"), F.size("suf").alias("length")
-    )
-    return (
-        adjacent.unionByName(dup_groups)
-        .filter(F.col("length") >= min_tokens)
-        .dropDuplicates(["seq"])
-        .select("seq", F.col("length").cast("int").alias("length"))
-        .orderBy(F.col("length").desc(), F.col("seq").asc())
-        .limit(top_n)
-    )
-
-
-def _tiled_docs(
-    df: DataFrame, id_col: str, text_col: str, tile: int, stride: int
-) -> DataFrame:
-    """(doc_id=struct(d, w), t): each doc split into consecutive
-    ``tile``-char windows starting every ``stride`` chars — the
-    pseudo-doc relation the tiled SA ranks over.  Window count per doc
-    is the smallest W with ``(W-1)*stride + tile >= len``, so windows
-    jointly cover every char and consecutive windows overlap by
-    ``tile - stride`` chars."""
-    full = df.select(
-        F.col(id_col).alias("_d"),
-        F.coalesce(F.col(text_col), F.lit("")).alias("_ft"),
-    ).filter(F.length("_ft") > 0)
-    nwin = F.greatest(
-        F.lit(1),
-        (F.ceil((F.length("_ft") - F.lit(tile)) / F.lit(stride)) + 1).cast("int"),
-    )
-    return full.select(
-        "_d", F.explode(F.sequence(F.lit(1), nwin)).alias("_w"), "_ft"
-    ).select(
-        F.struct(F.col("_d").alias("d"), F.col("_w").alias("w")).alias(
-            "doc_id"
-        ),
-        F.expr(f"substring(_ft, (_w - 1) * {stride} + 1, {tile})").alias("t"),
+    return _longest_repeats(
+        _TOKEN, df, id_col, text_col, max_tokens, min_tokens, top_n,
+        "seq", lambda c: F.array_join(c, " "),
     )
 
 
@@ -1753,21 +1726,7 @@ def repeat_spans_sa_tiled(
 
     Returns ``(doc_id, span_start, span_end)`` — 1-based absolute char
     offsets, end inclusive, anywhere in the doc."""
-    if min_len < 2 or min_len > tile:
-        raise ValueError(
-            f"need 2 <= min_len <= tile, got min_len={min_len} tile={tile}"
-        )
-    stride = tile - (min_len - 1)
-    wdocs = _tiled_docs(df, id_col, text_col, tile, stride)
-    ranks = _char_ranks(wdocs, tile)
-    pos = _position_dup_lengths(ranks, wdocs, "char", tile)
-    base = (F.col("doc_id.w") - 1) * stride + F.col("off")
-    marked = pos.filter(F.col("dup_len") >= min_len).select(
-        F.col("doc_id.d").alias("doc_id"),
-        base.alias("s"),
-        (base + F.col("dup_len") - 1).alias("e"),
-    )
-    return _merge_islands(marked)
+    return _tiled_repeat_spans(_CHAR, df, id_col, text_col, tile, min_len)
 
 
 def cut_repeat_spans_sa_tiled(
@@ -1788,7 +1747,7 @@ def cut_repeat_spans_sa_tiled(
     spans = repeat_spans_sa_tiled(
         df, id_col, text_col, tile=tile, min_len=min_len
     )
-    return _cut_char_spans(df, id_col, text_col, spans)
+    return _cut_spans(_CHAR, df, id_col, text_col, spans)
 
 
 def cut_contaminated_spans_sa(
@@ -1825,52 +1784,12 @@ def cut_contaminated_spans_sa(
     longer than the cap, see :func:`sa_contamination_scores`).
     Returns ``(doc_id, clean_text, n_spans, n_cut)`` for every
     arriving doc (unmarked docs pass through)."""
-    scored = sa_contamination_scores(
-        new, seen, id_col, text_col,
-        max_chars=max_chars, min_len=min_len, bucket_len=bucket_len,
-        max_bucket=max_bucket, full_doc=full_doc,
+    scored = _contamination_scores(
+        _CHAR, new, seen, id_col, text_col,
+        max_chars, min_len, bucket_len, max_bucket, full_doc,
     )
-    marked = scored.filter(F.col("m") >= min_len).select(
-        "doc_id",
-        F.col("off").alias("s"),
-        (F.col("off") + F.col("m") - 1).alias("e"),
-    )
-    return _cut_char_spans(new, id_col, text_col, _merge_islands(marked))
-
-
-def _tiled_token_docs(
-    df: DataFrame, id_col: str, text_col: str, tile: int, stride: int
-) -> DataFrame:
-    """(doc_id=struct(d, w), toks): token-grain twin of
-    :func:`_tiled_docs` — each doc's whitespace-token stream split into
-    consecutive ``tile``-token windows starting every ``stride``
-    tokens; windows jointly cover every token and consecutive windows
-    overlap by ``tile - stride`` tokens."""
-    full = (
-        df.select(
-            F.col(id_col).alias("_d"),
-            F.split(
-                F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+"
-            ).alias("_ft"),
-        )
-        .filter(
-            (F.size("_ft") > 1) | (F.element_at("_ft", 1) != "")
-        )
-    )
-    nwin = F.greatest(
-        F.lit(1),
-        (F.ceil((F.size("_ft") - F.lit(tile)) / F.lit(stride)) + 1).cast(
-            "int"
-        ),
-    )
-    return full.select(
-        "_d", F.explode(F.sequence(F.lit(1), nwin)).alias("_w"), "_ft"
-    ).select(
-        F.struct(F.col("_d").alias("d"), F.col("_w").alias("w")).alias(
-            "doc_id"
-        ),
-        F.expr(f"slice(_ft, (_w - 1) * {stride} + 1, {tile})").alias("toks"),
-    )
+    spans = _merge_islands(_marks(scored, "m", min_len))
+    return _cut_spans(_CHAR, new, id_col, text_col, spans)
 
 
 def repeat_spans_sa_tokens_tiled(
@@ -1894,22 +1813,7 @@ def repeat_spans_sa_tokens_tiled(
 
     Returns ``(doc_id, span_start, span_end)`` — 1-based absolute
     TOKEN indices, end inclusive, anywhere in the doc."""
-    if min_tokens < 2 or min_tokens > tile:
-        raise ValueError(
-            f"need 2 <= min_tokens <= tile, got min_tokens={min_tokens} "
-            f"tile={tile}"
-        )
-    stride = tile - (min_tokens - 1)
-    wdocs = _tiled_token_docs(df, id_col, text_col, tile, stride)
-    ranks = _token_ranks(wdocs, tile)
-    pos = _position_dup_lengths(ranks, wdocs, "token", tile)
-    base = (F.col("doc_id.w") - 1) * stride + F.col("off")
-    marked = pos.filter(F.col("dup_len") >= min_tokens).select(
-        F.col("doc_id.d").alias("doc_id"),
-        base.alias("s"),
-        (base + F.col("dup_len") - 1).alias("e"),
-    )
-    return _merge_islands(marked)
+    return _tiled_repeat_spans(_TOKEN, df, id_col, text_col, tile, min_tokens)
 
 
 def cut_repeat_spans_sa_tokens_tiled(
@@ -1930,4 +1834,4 @@ def cut_repeat_spans_sa_tokens_tiled(
     spans = repeat_spans_sa_tokens_tiled(
         df, id_col, text_col, tile=tile, min_tokens=min_tokens
     )
-    return _cut_token_spans(df, id_col, text_col, spans)
+    return _cut_spans(_TOKEN, df, id_col, text_col, spans)

@@ -949,6 +949,7 @@ class Pipeline:
             #    "grain": "char", "tile": 128, "min_len": 30,
             #    "quota": {"strata": "source", "max_per_stratum": 15}}
             from chewdata_spark.operators.curation import sa_curate_corpus
+            from chewdata_spark.operators.suffix import _GRAINS
 
             if not key:
                 raise ValueError("curate.sa_pipeline needs 'key'")
@@ -992,12 +993,12 @@ class Pipeline:
             # grain-aware defaults: the unit of min_len/tile/bucket
             # changes with the grain, so so do the family conventions
             # (char: Lee et al. 30-char / 128-tile / 8-char bucket;
-            # token: 5-token / 64 / 2; bpe: 9-piece / 64 / 4)
-            d_min, d_tile, d_bucket, d_cmp = {
-                "char": (30, 128, 8, 64),
-                "token": (5, 64, 2, 32),
-                "bpe": (9, 64, 4, 64),
-            }.get(grain, (30, 128, 8, 64))
+            # token: 5-token / 64 / 2; bpe: 9-piece / 64 / 4) — each
+            # grain's adapter holds them; an unknown grain falls back
+            # to char's and sa_curate_corpus rejects it
+            d_min, d_tile, d_bucket, d_cmp = _GRAINS.get(
+                grain, _GRAINS["char"]
+            ).defaults
             return sa_curate_corpus(
                 train, key, field,
                 benchmark=bench,

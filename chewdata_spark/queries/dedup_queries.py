@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from chewdata_spark.operators import dedup
 from chewdata_spark.operators.dedup import _OBS_SEQ
-from chewdata_spark.operators.suffix import _lcp_sql
+from chewdata_spark.operators.suffix import _CHAR
 from chewdata_spark.tables import load_table
 
 
@@ -2282,11 +2282,11 @@ def stream_ingest_dedup_sa(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.greatest(
             F.when(
                 F.col("_pred").isNotNull(),
-                F.expr(_lcp_sql("char", b="_pred", cap=max_chars)),
+                F.expr(_CHAR.lcp(b="_pred", cap=max_chars)),
             ).otherwise(0),
             F.when(
                 F.col("_succ").isNotNull(),
-                F.expr(_lcp_sql("char", b="_succ", cap=max_chars)),
+                F.expr(_CHAR.lcp(b="_succ", cap=max_chars)),
             ).otherwise(0),
         ).alias("_m"),
     )
@@ -2918,11 +2918,11 @@ def _stream_cut_spans_sa_marks(
         F.greatest(
             F.when(
                 F.col("_pred").isNotNull(),
-                F.expr(_lcp_sql("char", b="_pred", cap=max_chars)),
+                F.expr(_CHAR.lcp(b="_pred", cap=max_chars)),
             ).otherwise(0),
             F.when(
                 F.col("_succ").isNotNull(),
-                F.expr(_lcp_sql("char", b="_succ", cap=max_chars)),
+                F.expr(_CHAR.lcp(b="_succ", cap=max_chars)),
             ).otherwise(0),
         ).alias("_m"),
     )

@@ -316,8 +316,11 @@ def _normalize_sql() -> str:
     # DuckDB regexp_replace is first-match-only without the 'g' flag
     expr = f"regexp_replace({expr}, '[\\x00-\\x08\\x0b-\\x1f\\x7f]', '', 'g')"
     expr = f"regexp_replace({expr}, '[ \\t]+', ' ', 'g')"
-    expr = f"regexp_replace({expr}, ' ?\\n ?', '\\n', 'g')"
-    expr = f"trim(regexp_replace({expr}, '\\n{{3,}}', '\\n\\n', 'g'))"
+    # newline REPLACEMENTS are chr(10): DuckDB hands the replacement
+    # to RE2's rewrite, which drops a literal backslash-n (the pattern
+    # side's \n is a regex escape and stays as it is)
+    expr = f"regexp_replace({expr}, ' ?\\n ?', chr(10), 'g')"
+    expr = f"trim(regexp_replace({expr}, '\\n{{3,}}', chr(10) || chr(10), 'g'))"
     return f"""
 SELECT doc_id, {expr} AS norm_text, {expr} <> text AS changed
 FROM documents

@@ -957,7 +957,7 @@ def stream_ingest_dedup_sa_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAME oracle replays both twins verbatim."""
     import os
 
-    from chewdata_spark.operators.suffix import _lcp_sql
+    from chewdata_spark.operators.suffix import _TOKEN
     from chewdata_spark.operators.text import _tokens
     from chewdata_spark.operators.tokenize import (
         bpe_encode_corpus_rules,
@@ -1042,10 +1042,10 @@ def stream_ingest_dedup_sa_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.greatest(
             F.when(
-                F.col("_pred").isNotNull(), F.expr(_lcp_sql("token", b="_pred"))
+                F.col("_pred").isNotNull(), F.expr(_TOKEN.lcp(b="_pred"))
             ).otherwise(0),
             F.when(
-                F.col("_succ").isNotNull(), F.expr(_lcp_sql("token", b="_succ"))
+                F.col("_succ").isNotNull(), F.expr(_TOKEN.lcp(b="_succ"))
             ).otherwise(0),
         ).alias("_m"),
     )

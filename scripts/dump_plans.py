@@ -4,18 +4,36 @@ Usage: python scripts/dump_plans.py <tag_dir_suffix> q1 q2 ...
 e.g.   python scripts/dump_plans.py r15/before curate_pipeline_decontam_sa
 
 Writes plans/<tag>/<query>.txt (the caller renames to _before/_after
-or passes a tag directory per side).
+or passes a tag directory per side).  Process-dependent ids are
+normalized so two checkouts' dumps diff directly: expression ids
+(``#123`` -> ``#N``), the process-global ``observe`` names
+(``sa_ingest_<n>`` / ``sa_arrivals_<n>`` -> ``..._N``), exchange plan
+ids and checkpointed RDD ids with their call sites.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from chewdata_spark.queries import all_queries
 from chewdata_spark.session import get_spark
+
+_IDS = [
+    (re.compile(r"#\d+L?\b"), "#N"),
+    (re.compile(r"\b(sa_ingest|sa_arrivals)_\d+\b"), r"\1_N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\] at (\w+) at [^,]*"), r"RDD[N] at \1"),
+]
+
+
+def normalize(plan: str) -> str:
+    for pattern, repl in _IDS:
+        plan = pattern.sub(repl, plan)
+    return plan
 
 
 def main() -> None:
@@ -35,7 +53,7 @@ def main() -> None:
             df._jdf.queryExecution(), "formatted"
         )
         with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
-            f.write(txt)
+            f.write(normalize(txt))
         print(f"wrote plans/{tag}/{name}.txt", flush=True)
     spark.stop()
 

@@ -492,3 +492,63 @@ def test_sa_curate_corpus_bpe_repeat_only_contract(spark, sf_dir):
         kept = len(r.clean_text.split()) if r.clean_text.strip() else 0
         assert kept + r.n_cut == totals[r.doc_id], (
             r.doc_id, kept, r.n_cut, totals[r.doc_id])
+
+
+def test_multiline_docs_match_normalize_and_flagship_oracles(spark, tmp_path):
+    # No documents.parquet in the test data holds a newline, so the
+    # oracles' newline handling is pinned here: multi-line docs with
+    # spaces around line breaks and blank-line runs, a passage shared
+    # across a line break, and a leak from the even-id benchmark slice.
+    # normalize_text keeps the newlines, and so must its DuckDB replay;
+    # the decontaminating SA flagship (sa_curate_corpus) must match its
+    # composed oracle on the same corpus.
+    import random
+
+    import duckdb
+    import pandas as pd
+
+    from chewdata_spark.queries.curation_queries import (
+        ORACLES,
+        curate_pipeline_decontam_sa,
+    )
+    from chewdata_spark.queries.text_queries import (
+        _normalize_sql,
+        normalize_documents,
+    )
+    from tests.oracle import compare
+
+    rng = random.Random(5)
+    vocab = [f"w{i}" for i in range(60)]
+
+    def line(n):
+        return " ".join(rng.choice(vocab) for _ in range(n))
+
+    shared = "the shared passage runs on \n across one line break here"
+    rows = []
+    for d in range(1, 13):
+        parts = [line(rng.randint(6, 12)) for _ in range(rng.randint(2, 4))]
+        if d % 3 == 0:
+            parts.insert(1, shared)
+        if d in (4, 7):  # odd 7 leaks even 4's line
+            parts.append("benchmark answer key line number four is here")
+        text = " \n ".join(parts) + ("\n\n\n\ntail " + line(6) if d % 4 == 1 else "")
+        rows.append((d, text, "en", f"s{d % 2}", len(text)))
+    pd.DataFrame(
+        rows, columns=["doc_id", "text", "lang", "source", "n_chars"]
+    ).to_parquet(tmp_path / "documents.parquet", index=False)
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{tmp_path / 'documents.parquet'}')"
+    )
+    sf_dir = str(tmp_path)
+
+    norm = normalize_documents(spark, sf_dir)
+    assert all("\n" in r["norm_text"] for r in norm.collect())
+    ok, msg = compare(norm, con, _normalize_sql())
+    assert ok, msg
+    flagship = ORACLES["curate_pipeline_decontam_sa"]
+    ok, msg = compare(curate_pipeline_decontam_sa(spark, sf_dir), con, flagship)
+    assert ok, msg
+    # the planted passage and leak are really cut, not vacuously equal
+    assert con.sql(f"SELECT max(n_cut) FROM ({flagship})").fetchone()[0] > 0

@@ -905,6 +905,20 @@ def test_part_transit_conflicts_emit_once_plan(spark, sf_dir):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
 
 
+def _left_semi_inputs(df) -> list[set[str]]:
+    """Output column names of the LEFT input of every LeftSemi join in
+    ``df``'s optimized logical plan."""
+    inputs, stack = [], [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Join" and node.joinType().toString() == "LeftSemi":
+            out = node.left().output()
+            inputs.append({out.apply(i).name() for i in range(out.size())})
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return inputs
+
+
 def test_sa_incremental_plan_no_global_window(spark, sf_dir):
     # incremental SA ranking: every Window partitions by the prefix
     # bucket (no unpartitioned window over the suffix space), the
@@ -926,8 +940,13 @@ def test_sa_incremental_plan_no_global_window(spark, sf_dir):
     for spec in specs:
         assert spec.startswith("_bk"), spec
     optimized = df._jdf.queryExecution().optimizedPlan().toString()
-    # the per-position semi-join is GONE (that is the optimization)...
-    assert "LeftSemi" not in optimized, optimized
+    # the per-position semi-join over the ARRIVING suffixes is GONE
+    # (that is the optimization): no LeftSemi may take a relation
+    # carrying the arrival position (doc_id, off) as its left input.
+    # Semi-joins at bucket grain on the SEEN side (the hot-bucket cap
+    # keeping seen suffixes in kept buckets) are allowed.
+    for left in _left_semi_inputs(df):
+        assert not {"doc_id", "off"} & left, (left, optimized)
     # ...because the bounded salt table (a checkpointed LogicalRDD,
     # built with the occupied-bucket restriction folded in) inner-joins
     # the arrivals on _bk and drops non-occupied positions as a side
@@ -937,6 +956,24 @@ def test_sa_incremental_plan_no_global_window(spark, sf_dir):
         r"Join Inner, .*_bk", optimized
     ), optimized
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
+
+
+def test_sa_incremental_pin_catches_arrival_semi_join(spark, sf_dir, monkeypatch):
+    # the pin above must still fire on the regression it was written
+    # for: a per-position LeftSemi of the ARRIVING suffixes against the
+    # seen-occupied buckets, ahead of the scorer core
+    from chewdata_spark.operators import suffix as S
+    from chewdata_spark.queries.dedup_queries import dedup_incremental_ingest_sa
+
+    core = S._neighbour_scores
+
+    def regressed(g, new_suf, seen_suf, **kw):
+        occupied = seen_suf.select("_bk").distinct()
+        return core(g, new_suf.join(occupied, "_bk", "left_semi"), seen_suf, **kw)
+
+    monkeypatch.setattr(S, "_neighbour_scores", regressed)
+    df = dedup_incremental_ingest_sa(spark, sf_dir)
+    assert any({"doc_id", "off"} <= left for left in _left_semi_inputs(df))
 
 
 def test_matryoshka_two_level_coarse_topc(spark, sf_dir):

@@ -872,44 +872,67 @@ def test_tiled_sa_tokens_cut_finds_repeat_beyond_head_window(spark):
     assert got == sorted(expected)
 
 
-@pytest.mark.parametrize("seed,alpha", [(1, "ab"), (2, "abc"), (3, "ab")])
-def test_tiled_sa_randomized_equivalence(spark, seed, alpha):
+@pytest.mark.parametrize(
+    "grain,seed,alpha",
+    [
+        pytest.param("char", 1, "ab", id="1-ab"),
+        pytest.param("char", 2, "abc", id="2-abc"),
+        pytest.param("char", 3, "ab", id="3-ab"),
+        pytest.param("token", 1, "ab", id="token-1-ab"),
+        pytest.param("token", 2, "abc", id="token-2-abc"),
+        pytest.param("token", 3, "ab", id="token-3-ab"),
+    ],
+)
+def test_tiled_sa_randomized_equivalence(spark, grain, seed, alpha):
     """Adversarial randomized check of the tiled device: tiny alphabets
     make repeats dense and periodic (self-overlap pressure at every
     window boundary), where a tiling bug would show first.  Tiled spans
     must equal brute-force duplicated-min_len-gram coverage runs
-    exactly, with tile=32 forcing many windows per doc."""
+    exactly, with tile=32 forcing many windows per doc.  At token grain
+    each letter is a whole word, one of them a control char (below
+    every printable byte, not whitespace to the tokenizer)."""
     from collections import Counter
 
-    from chewdata_spark.operators.suffix import repeat_spans_sa_tiled
+    from chewdata_spark.operators.suffix import (
+        repeat_spans_sa_tiled,
+        repeat_spans_sa_tokens_tiled,
+    )
 
     rng = random.Random(seed)
     min_len, tile = 6, 32
-    texts = {
-        d: "".join(rng.choice(alpha) for _ in range(rng.randint(1, 220)))
+    units = {
+        d: [rng.choice(alpha) for _ in range(rng.randint(1, 220))]
         for d in range(1, 7)
     }
+    if grain == "char":
+        texts = {d: "".join(u) for d, u in units.items()}
+        spans = repeat_spans_sa_tiled
+        kw = {"min_len": min_len}
+    else:
+        words = {"a": "alpha", "b": "\x01", "c": "al"}
+        units = {d: [words[c] for c in u] for d, u in units.items()}
+        texts = {d: " ".join(u) for d, u in units.items()}
+        spans = repeat_spans_sa_tokens_tiled
+        kw = {"min_tokens": min_len}
     df = spark.createDataFrame(
         sorted(texts.items()), "doc_id long, text string"
     )
     got = sorted(
         (r["doc_id"], r["span_start"], r["span_end"])
-        for r in repeat_spans_sa_tiled(
-            df, "doc_id", "text", tile=tile, min_len=min_len
-        ).collect()
+        for r in spans(df, "doc_id", "text", tile=tile, **kw).collect()
     )
     grams = Counter(
-        t[i : i + min_len]
-        for t in texts.values()
+        tuple(t[i : i + min_len])
+        for t in units.values()
         for i in range(len(t) - min_len + 1)
     )
     expected = []
-    for d, t in texts.items():
+    for d, t in units.items():
         cov = sorted(
             {
                 j
                 for i in range(len(t) - min_len + 1)
-                if grams[t[i : i + min_len]] >= 2
+                if grams[tuple(t[i : i + min_len])] >= 2
                 for j in range(i + 1, i + min_len + 1)
             }
         )
