@@ -53,6 +53,26 @@ _MUSTACHE_PATH = re.compile(r"\{\{\s*([\w.]+)\s*\}\}")
 # connectors spell their holes `{{ input.<field> }}`)
 _PARAM_HOLE = re.compile(r"\{\{\s*input\.([\w.]+)\s*\}\}")
 
+# ``{{ CHEWDATA_X }}`` environment holes in a config string
+_ENV_HOLE = re.compile(r"\{\{\s*(CHEWDATA_\w+)\s*\}\}")
+
+
+def _parse_steps(config: str, loads: Any) -> list[dict[str, Any]]:
+    """Substitute the config's ``CHEWDATA_*`` holes, parse it with
+    ``loads`` (JSON or YAML) and check that it is a step list."""
+
+    def env_repl(m: re.Match) -> str:
+        val = os.environ.get(m.group(1))
+        if val is None:
+            raise KeyError(f"environment variable {m.group(1)!r} referenced in config but not set")
+        return val
+
+    steps = loads(_ENV_HOLE.sub(env_repl, config))
+    if not isinstance(steps, list):
+        raise ValueError("config must be a list of steps")
+    return steps
+
+
 class _FanoutOverflow(Exception):
     """Distinct-parameter cardinality exceeded the fan-out limit."""
 
@@ -103,6 +123,46 @@ _LOOKUP = re.compile(
 )
 
 
+@dataclass(frozen=True)
+class _CurateMethod:
+    options: set[str]  # the method's own step keys
+    needs_key: bool = True  # needs the step's `key` column
+    streams: bool = False  # usable under a `stream: true` reader
+
+
+# step keys every curate method accepts
+_CURATE_COMMON = {"type", "method", "name", "key", "field", "data_type"}
+# every curate method (see Pipeline._curate).  The streaming ones are
+# per-row filters, hash-coin projections, one complete-mode aggregation
+# (exact_dedup, decontaminate) or a stream-static anti-join (ingest_dedup)
+_CURATE_METHODS = {
+    "exact_dedup": _CurateMethod({"fields"}, streams=True),
+    "ingest_dedup": _CurateMethod({"seen", "fields", "seen_fields"}, needs_key=False,
+                                  streams=True),
+    "minhash_dedup": _CurateMethod({"threshold", "max_bucket"}),
+    "quality_filter": _CurateMethod({"min_quality"}, needs_key=False, streams=True),
+    "language_filter": _CurateMethod({"lang"}, needs_key=False, streams=True),
+    "gopher_filter": _CurateMethod(set(), streams=True),
+    "classifier_filter": _CurateMethod({"dim", "weights", "salt", "min_score"}, streams=True),
+    "dsir_select": _CurateMethod({"target_field", "target_value", "dim", "top_frac",
+                                  "min_log_importance"}),
+    "logprob_filter": _CurateMethod({"drop_frac"}),
+    "sa_pipeline": _CurateMethod({"benchmark_filter", "grain", "tile", "min_len",
+                                  "compare_cap", "bucket_len", "max_bucket", "bpe_iters",
+                                  "quota", "carry"}),
+    "sample": _CurateMethod({"strata", "rates", "default_rate"}, streams=True),
+    "mix": _CurateMethod({"strata", "weights", "default_weight"}, streams=True),
+    "split": _CurateMethod({"val", "test"}, streams=True),
+    "pack": _CurateMethod({"seq_len"}),
+    "shard_shuffle": _CurateMethod({"num_shards", "seed"}),
+    "quota": _CurateMethod({"strata", "max_per_stratum", "seed"}),
+    "lines_dedup": _CurateMethod({"min_words"}),
+    "span_cut": _CurateMethod({"k"}),
+    "decontaminate": _CurateMethod({"benchmark", "benchmark_field", "n", "min_hits"},
+                                   streams=True),
+}
+
+
 @dataclass
 class WriteResult:
     path: str
@@ -123,17 +183,7 @@ class Pipeline:
         """Parse a JSON config with CHEWDATA_* environment substitution
         (reference env_applier, src/main.rs:73-113): ``{{ CHEWDATA_X }}``
         holes are replaced by the environment value before parsing."""
-        import os
-
-        def env_repl(m: re.Match) -> str:
-            name = m.group(1)
-            val = os.environ.get(name)
-            if val is None:
-                raise KeyError(f"environment variable {name!r} referenced in config but not set")
-            return val
-
-        config = re.sub(r"\{\{\s*(CHEWDATA_\w+)\s*\}\}", env_repl, config)
-        return cls(json.loads(config), spark)
+        return cls(_parse_steps(config, json.loads), spark)
 
     @classmethod
     def from_config(cls, config: str, spark: SparkSession | None = None) -> "Pipeline":
@@ -142,20 +192,10 @@ class Pipeline:
         python stdlib parser — YAML covers its common forms)."""
         try:
             return cls.from_json(config, spark)
-        except (json.JSONDecodeError, ValueError):
-            import os
-
+        except json.JSONDecodeError:
             import yaml
 
-            config = re.sub(
-                r"\{\{\s*(CHEWDATA_\w+)\s*\}\}",
-                lambda m: os.environ[m.group(1)],
-                config,
-            )
-            steps = yaml.safe_load(config)
-            if not isinstance(steps, list):
-                raise ValueError("config must be a list of steps")
-            return cls(steps, spark)
+            return cls(_parse_steps(config, yaml.safe_load), spark)
 
     # -- compilation ---------------------------------------------------------
 
@@ -245,57 +285,24 @@ class Pipeline:
 
                     http_erase(compile_curl_options(conn, step.get("document", {})))
                 continue
-            elif kind in ("transformer", "validator", "writer"):
+            elif kind in ("transformer", "validator", "writer", "curate"):
                 if df is None:
                     raise ValueError(f"step {kind!r} has no upstream data")
-                data_type = step.get("data_type", "ok")
-                if not has_err and data_type == "ok":
-                    # no upstream step can emit err records — skip the
-                    # split/union entirely (keeps plans narrow and lets
-                    # remove-actions actually drop columns)
-                    if kind == "transformer":
-                        df = self._record_history(self._transform(spark, step, df), step)
-                        has_err = has_err or _has_fallible_actions(step)
-                    elif kind == "validator":
-                        df = self._record_history(self._validate(spark, step, df), step)
-                        has_err = True
-                    else:
-                        wr = self._write(step, df, execute=execute_writes)
-                        writes.append(wr)
-                        if wr.fmt == "http":
-                            # failed sends carry _error → Err channel
-                            df = wr.rows_df
-                            has_err = True
-                    continue
-                df = with_error_col(df)
-                mine = ok_stream(df) if data_type == "ok" else err_stream(df)
-                other = err_stream(df) if data_type == "ok" else ok_stream(df)
-                if kind == "transformer":
-                    mine = self._record_history(self._transform(spark, step, mine), step)
-                    has_err = has_err or _has_fallible_actions(step)
-                elif kind == "validator":
-                    mine = self._record_history(self._validate(spark, step, mine), step)
-                    has_err = True
-                else:
-                    wr = self._write(step, mine, execute=execute_writes)
-                    writes.append(wr)
-                    if wr.fmt == "http":
-                        mine = wr.rows_df
-                df = mine.unionByName(other, allowMissingColumns=True)
-            elif kind == "curate":
-                if df is None:
-                    raise ValueError("step 'curate' has no upstream data")
-                if has_err:
-                    # error-channel semantics match transformer/validator:
-                    # curation applies to the ok stream; Err records pass
-                    # through untouched (they are routed, not curated)
+                # each step transforms its own stream and passes the other
+                # through; curation applies to the ok stream only (Err
+                # records are routed, not curated).  Until some step can
+                # emit Err records an ok step skips the split and union
+                # (narrow plans; remove-actions really drop columns)
+                data_type = "ok" if kind == "curate" else step.get("data_type", "ok")
+                other = None
+                if has_err or data_type != "ok":
                     df = with_error_col(df)
-                    ok = self._record_history(
-                        self._curate(step, ok_stream(df)), step
-                    )
-                    df = ok.unionByName(err_stream(df), allowMissingColumns=True)
-                else:
-                    df = self._record_history(self._curate(step, df), step)
+                    ok, err = ok_stream(df), err_stream(df)
+                    df, other = (ok, err) if data_type == "ok" else (err, ok)
+                df, can_err = self._apply(spark, step, df, writes, execute_writes)
+                has_err = has_err or can_err
+                if other is not None:
+                    df = df.unionByName(other, allowMissingColumns=True)
             elif kind is None:
                 raise ValueError(f"step missing 'type': {step}")
             else:
@@ -303,6 +310,27 @@ class Pipeline:
         if df is None:
             raise ValueError("pipeline produced no data (no reader/generator)")
         return df, writes
+
+    def _apply(
+        self, spark: SparkSession, step: dict, df: DataFrame,
+        writes: list[WriteResult], execute_writes: bool,
+    ) -> tuple[DataFrame, bool]:
+        """Apply one transformer/validator/writer/curate step to the
+        stream it acts on; returns the result and whether the step can
+        emit Err records."""
+        kind = step["type"]
+        if kind == "transformer":
+            out, can_err = self._transform(spark, step, df), _has_fallible_actions(step)
+        elif kind == "validator":
+            out, can_err = self._validate(spark, step, df), True
+        elif kind == "curate":
+            out, can_err = self._curate(step, df), False
+        else:
+            wr = self._write(step, df, execute=execute_writes)
+            writes.append(wr)
+            # an HTTP sink's failed sends carry _error → Err channel
+            return (wr.rows_df, True) if wr.fmt == "http" else (df, False)
+        return self._record_history(out, step), can_err
 
     def _record_history(self, df: DataFrame, step: dict) -> DataFrame:
         name = step.get("name")
@@ -502,9 +530,7 @@ class Pipeline:
             jl = spark.sparkContext.parallelize([json.dumps(r) for r in records])
             return spark.read.json(jl)
         if ctype == "local":
-            path = conn["path"]
-            if _METADATA_HOLE.search(path):
-                path = _resolve_metadata_holes(path, doc.get("type", "json"))
+            path, fmt, options = _document_target(conn["path"], doc)
             checksum = conn.get("checksum")
             if checksum:
                 # reference verifies file digests before reading
@@ -515,14 +541,10 @@ class Pipeline:
                     spark, path, checksum["value"], checksum.get("algo", "sha256")
                 ):
                     raise ValueError(f"checksum mismatch for {path}")
-            from chewdata_spark.sources.documents import metadata_options
-
             df = read_document(
-                spark,
-                path,
-                doc.get("type", _guess_format(path)),
+                spark, path, fmt,
                 entry_path=doc.get("entry_path"),
-                options={**metadata_options(doc), **(doc.get("options") or {})},
+                options=options,
                 resolve_types=bool(doc.get("resolve_types", False)),
             )
             if conn.get("cache"):
@@ -576,38 +598,22 @@ class Pipeline:
         silently ingesting ``/x/docs_old``)."""
         from chewdata_spark.streaming.ops import read_stream_directory
 
-        conn = step.get("connector", {})
         doc = step.get("document", {})
-        path = conn["path"]
-        if _METADATA_HOLE.search(path):
-            path = _resolve_metadata_holes(path, doc.get("type", "json"))
-        fmt = doc.get("type", _guess_format(path))
-        if fmt == "jsonl":
-            fmt = "json"
-        if fmt not in ("parquet", "json", "csv", "text"):
+        path, fmt, options = _document_target(step["connector"]["path"], doc)
+        if fmt not in ("parquet", "json", "jsonl", "csv", "text"):
             raise ValueError(
                 f"stream: true supports parquet/json/jsonl/csv/text; "
                 f"got document type {fmt!r}"
             )
-        schema = doc.get("schema")
-        if not schema:
-            probe = read_document(
-                spark, path, doc.get("type", fmt),
-                entry_path=doc.get("entry_path"),
-                options=doc.get("options") or {},
-            )
-            schema = probe.schema
-        if any(c in path for c in "*?[") or os.path.isdir(path):
-            glob_path = path
-        else:
-            glob_path = path + "*"
-        return read_stream_directory(
-            spark, glob_path, fmt, schema,
-            options=doc.get("options") or {},
-        )
+        schema = doc.get("schema") or read_document(
+            spark, path, fmt, entry_path=doc.get("entry_path"), options=options
+        ).schema
+        if not (any(c in path for c in "*?[") or os.path.isdir(path)):
+            path += "*"
+        return read_stream_directory(spark, path, fmt, schema, options=options)
 
     def _transform(self, spark: SparkSession, step: dict, df: DataFrame) -> DataFrame:
-        ref_cfgs = step.get("referentials") or step.get("refs") or {}
+        ref_cfgs = step.get("referentials") or {}
         # static referentials read once and cache (reference set_cache for
         # non-variable connectors, src/step/referential.rs:117-121);
         # variable ones ({{ input.* }} holes) resolve per lookup below
@@ -656,110 +662,62 @@ class Pipeline:
             {"type": "curate", "method": "minhash_dedup",
              "key": "doc_id", "field": "text", "threshold": 0.5}
 
-        methods: exact_dedup | minhash_dedup | quality_filter |
-        language_filter | gopher_filter | classifier_filter |
-        dsir_select | logprob_filter | sample | split | lines_dedup |
-        span_cut | decontaminate | ingest_dedup | pack | shard_shuffle |
-        quota |
-        sa_pipeline (the Lee et al. 2022 flagship — tiled-SA
-        whole-repeat cut, optional benchmark decontamination,
-        per-stratum quota, at char / token / BPE grain).  Every method is the same operator the query
+        The methods, with their options, key need and streaming
+        capability, are the entries of ``_CURATE_METHODS``; the flagship
+        is ``sa_pipeline`` (Lee et al. 2022: tiled-SA whole-repeat cut,
+        optional benchmark decontamination, per-stratum quota, at char /
+        token / BPE grain).  Every method is the same operator the query
         registry exposes; determinism rules (md5 coins, min-key
         survivors) carry over unchanged.
         """
-        from pyspark.sql.window import Window
-
         method = step.get("method")
         key = step.get("key")
         field = step.get("field", "text")
-        # strict option validation for EVERY method: a silently-ignored
-        # typo is a correctness hazard on the config surface (e.g. a
-        # misspelled threshold runs with the default and reports
-        # success) — unknown keys fail loudly instead
-        _method_keys = {
-            "exact_dedup": {"fields"},
-            "minhash_dedup": {"threshold", "max_bucket"},
-            "quality_filter": {"min_quality"},
-            "language_filter": {"lang"},
-            "gopher_filter": set(),
-            "classifier_filter": {"dim", "weights", "salt", "min_score"},
-            "dsir_select": {"target_field", "target_value", "dim",
-                            "top_frac", "min_log_importance"},
-            "logprob_filter": {"drop_frac"},
-            "sa_pipeline": {"benchmark_filter", "grain", "tile", "min_len",
-                            "compare_cap", "bucket_len", "max_bucket",
-                            "bpe_iters", "quota", "carry"},
-            "sample": {"strata", "rates", "default_rate"},
-            "mix": {"strata", "weights", "default_weight"},
-            "split": {"val", "test"},
-            "pack": {"seq_len"},
-            "shard_shuffle": {"num_shards", "seed"},
-            "quota": {"strata", "max_per_stratum", "seed"},
-            "lines_dedup": {"min_words"},
-            "span_cut": {"k"},
-            "decontaminate": {"benchmark", "benchmark_field", "n",
-                              "min_hits"},
-            "ingest_dedup": {"seen", "fields", "seen_fields"},
+        if method not in _CURATE_METHODS:
+            raise ValueError(f"unsupported curate method {method!r}")
+        spec = _CURATE_METHODS[method]
+        # a silently ignored typo (a misspelled threshold runs with the
+        # default and reports success) fails loudly instead;
+        # underscore-prefixed keys pass (the "_comment" JSON idiom)
+        unknown = {
+            k for k in set(step) - spec.options - _CURATE_COMMON if not k.startswith("_")
         }
-        if method in _method_keys:
-            known = _method_keys[method] | {
-                "type", "method", "name", "key", "field", "data_type",
-            }
-            # underscore-prefixed keys pass (the "_comment" JSON idiom)
-            unknown = {
-                k for k in set(step) - known if not k.startswith("_")
-            }
-            if unknown:
-                raise ValueError(
-                    f"curate.{method}: unknown option(s) {sorted(unknown)}; "
-                    f"known: {sorted(_method_keys[method])}"
-                )
-        _stream_capable = {
-            "exact_dedup", "quality_filter", "language_filter",
-            "gopher_filter", "classifier_filter",
-            # hash-coin projections (zero state) and the stream-static
-            # benchmark overlap test (one complete-mode aggregation)
-            "sample", "split", "mix", "decontaminate",
-            # stream-static anti-join: stateless, append-mode — the
-            # resident-ingest shape (state lives in the SEEN corpus
-            # on disk, not the stream)
-            "ingest_dedup",
-        }
-        if df.isStreaming and method not in _stream_capable:
+        if unknown:
+            raise ValueError(
+                f"curate.{method}: unknown option(s) {sorted(unknown)}; "
+                f"known: {sorted(spec.options)}"
+            )
+        if spec.needs_key and not key:
+            raise ValueError(f"curate.{method} needs 'key'")
+        if df.isStreaming and not spec.streams:
             raise ValueError(
                 f"curate.{method} is not stream-capable; methods usable "
-                f"under a 'stream: true' reader: {sorted(_stream_capable)}"
+                f"under a 'stream: true' reader: "
+                f"{sorted(m for m, sp in _CURATE_METHODS.items() if sp.streams)}"
             )
+        # the hot-bucket cap of minhash_dedup and sa_pipeline; null
+        # disables it for corpora where keeping a hot bucket's
+        # duplicates is wrong
+        max_bucket = step.get("max_bucket", 10_000)
+        if max_bucket is not None:
+            max_bucket = int(max_bucket)
         if method == "exact_dedup":
-            if not key:
-                raise ValueError("curate.exact_dedup needs 'key' (deterministic survivor)")
-            fields = step.get("fields") or [field]
-            content = F.concat_ws(
-                "\x1f", *[F.col(c).cast("string") for c in fields]
-            )
+            # one survivor per content signature: the row with the
+            # smallest non-NULL key (NULL keys order last, so a group of
+            # NULL keys keeps one of its rows whole).  min_by commutes,
+            # so a streaming run (one stateful aggregation, complete
+            # output mode, one state row per signature) matches the
+            # batch result whatever the micro-batch order, up to ties
+            # between equal keys.
             if df.isStreaming:
-                # Streaming form with the SAME survivor rule as batch
-                # (min key per content signature): a stateful
-                # aggregation keeping min_by(full row, key) per sig.
-                # dropDuplicates would be arrival-order-dependent;
-                # min_by is deterministic under ANY micro-batch order,
-                # so an availableNow run hash-matches the batch
-                # pipeline.  Requires complete output mode (recorded
-                # for the sink); state is one row per distinct
-                # signature — the same cardinality the batch shuffle
-                # carries.
                 self._claim_stream_stateful("exact_dedup")
-                cols = df.columns
-                return (
-                    df.groupBy(F.md5(content).alias("_cur_sig"))
-                    .agg(F.min_by(F.struct(*cols), F.col(key)).alias("_row"))
-                    .select("_row.*")
-                )
-            w = Window.partitionBy(F.md5(content)).orderBy(F.col(key).asc())
+            fields = step.get("fields") or [field]
+            sig = F.md5(F.concat_ws("\x1f", *[F.col(c).cast("string") for c in fields]))
+            order = F.struct(F.col(key).isNull(), F.col(key))
             return (
-                df.withColumn("_cur_rn", F.row_number().over(w))
-                .filter(F.col("_cur_rn") == 1)
-                .drop("_cur_rn")
+                df.groupBy(sig.alias("_cur_sig"))
+                .agg(F.min_by(F.struct(*df.columns), order).alias("_row"))
+                .select("_row.*")
             )
         if method == "ingest_dedup":
             # Incremental-ingest dedup: drop arriving records whose
@@ -805,22 +763,17 @@ class Pipeline:
             )
             from chewdata_spark.operators.graph import cluster_dedup
 
-            if not key:
-                raise ValueError("curate.minhash_dedup needs 'key'")
             thr = float(step.get("threshold", 0.5))
             # hot-bucket cap: candidate buckets larger than max_bucket
             # are dropped (boilerplate protection; their duplicates are
-            # RETAINED in the cleaned output).  Default 10000 matches
-            # minhash_candidate_pairs; null/None in the step config
-            # disables the cap for corpora where retention is wrong.
-            mb = step.get("max_bucket", 10_000)
+            # RETAINED in the cleaned output)
             sigs = minhash_signatures_portable(df, key, field, num_perm=32)
             pairs = minhash_candidate_pairs(
                 sigs,
                 num_perm=32,
                 bands=16,
                 jaccard_threshold=thr,
-                max_bucket=None if mb is None else int(mb),
+                max_bucket=max_bucket,
             )
             return cluster_dedup(df, pairs, key)
         if method == "quality_filter":
@@ -839,8 +792,6 @@ class Pipeline:
                 gopher_quality_gate,
             )
 
-            if not key:
-                raise ValueError("curate.gopher_filter needs 'key'")
             if df.isStreaming:
                 # the gate relation derives from df itself, so the
                 # batch semi-join would be a stream-stream self-join;
@@ -858,8 +809,6 @@ class Pipeline:
                 synthetic_classifier_weights,
             )
 
-            if not key:
-                raise ValueError("curate.classifier_filter needs 'key'")
             dim = int(step.get("dim", 256))
             w_cfg = step.get("weights")
             if w_cfg:
@@ -895,8 +844,6 @@ class Pipeline:
         if method == "dsir_select":
             from chewdata_spark.operators.curation import dsir_log_ratio
 
-            if not key:
-                raise ValueError("curate.dsir_select needs 'key'")
             tgt_field = step.get("target_field", "lang")
             tgt_value = step.get("target_value", "en")
             scored = dsir_log_ratio(
@@ -928,8 +875,6 @@ class Pipeline:
         if method == "logprob_filter":
             from chewdata_spark.operators.curation import filter_by_logprob
 
-            if not key:
-                raise ValueError("curate.logprob_filter needs 'key'")
             kept = filter_by_logprob(
                 df, key, field, drop_frac=float(step.get("drop_frac", 0.1))
             ).select(F.col("doc_id").alias(key))
@@ -951,8 +896,6 @@ class Pipeline:
             from chewdata_spark.operators.curation import sa_curate_corpus
             from chewdata_spark.operators.suffix import _GRAINS
 
-            if not key:
-                raise ValueError("curate.sa_pipeline needs 'key'")
             q_known = {"strata", "max_per_stratum"}
             q_raw = step.get("quota")
             if q_raw is not None and not isinstance(q_raw, dict):
@@ -1007,7 +950,7 @@ class Pipeline:
                 min_len=int(step.get("min_len", d_min)),
                 compare_cap=int(step.get("compare_cap", d_cmp)),
                 bucket_len=int(step.get("bucket_len", d_bucket)),
-                max_bucket=int(step.get("max_bucket", 10_000)),
+                max_bucket=max_bucket,
                 bpe_iters=int(step.get("bpe_iters", 64)),
                 quota_col=quota.get("strata"),
                 max_per_stratum=int(quota.get("max_per_stratum", 15)),
@@ -1016,8 +959,6 @@ class Pipeline:
         if method == "sample":
             from chewdata_spark.operators.curation import stratified_sample
 
-            if not key:
-                raise ValueError("curate.sample needs 'key'")
             return stratified_sample(
                 df,
                 step.get("strata", "source"),
@@ -1033,8 +974,6 @@ class Pipeline:
             # it is stream-capable like the other hash-coin methods.
             from chewdata_spark.operators.curation import weighted_mix
 
-            if not key:
-                raise ValueError("curate.mix needs 'key' (the md5 coin)")
             weights = step.get("weights") or {}
             if not isinstance(weights, dict):
                 raise ValueError(
@@ -1057,8 +996,6 @@ class Pipeline:
             # as the pack_sequences registry query
             from chewdata_spark.operators.curation import pack_sequences
 
-            if not key:
-                raise ValueError("curate.pack needs 'key'")
             n_tokens = F.size(
                 F.split(F.trim(F.lower(F.col(field))), r"\s+")
             )
@@ -1074,8 +1011,6 @@ class Pipeline:
             # in-shard position, bit-reproducible, no global sort
             from chewdata_spark.operators.curation import shard_shuffle
 
-            if not key:
-                raise ValueError("curate.shard_shuffle needs 'key'")
             return shard_shuffle(
                 df, key,
                 num_shards=int(step.get("num_shards", 16)),
@@ -1087,8 +1022,6 @@ class Pipeline:
             # deterministic md5 order
             from chewdata_spark.operators.curation import stratum_quota
 
-            if not key:
-                raise ValueError("curate.quota needs 'key'")
             return stratum_quota(
                 df,
                 step.get("strata", "source"),
@@ -1099,8 +1032,6 @@ class Pipeline:
         if method == "split":
             from chewdata_spark.operators.curation import train_val_test_split
 
-            if not key:
-                raise ValueError("curate.split needs 'key'")
             return train_val_test_split(
                 df,
                 key,
@@ -1110,8 +1041,6 @@ class Pipeline:
         if method in ("lines_dedup", "span_cut"):
             from chewdata_spark.operators import dedup as D
 
-            if not key:
-                raise ValueError(f"curate.{method} needs 'key'")
             if method == "lines_dedup":
                 cleaned = D.dedup_lines_global(
                     df.select(key, field),
@@ -1137,8 +1066,6 @@ class Pipeline:
         if method == "decontaminate":
             from chewdata_spark.operators.curation import decontaminate
 
-            if not key:
-                raise ValueError("curate.decontaminate needs 'key'")
             bench_cfg = step.get("benchmark")
             if not bench_cfg:
                 raise ValueError(
@@ -1168,7 +1095,6 @@ class Pipeline:
                 F.col("n_hit_grams") >= int(step.get("min_hits", 1))
             ).select(F.col("doc_id").alias(key))
             return df.join(flagged, key, "left_anti")
-        raise ValueError(f"unsupported curate method {method!r}")
 
     def _claim_stream_stateful(self, method: str) -> None:
         """Spark supports ONE streaming aggregation per query: a second
@@ -1268,7 +1194,7 @@ class Pipeline:
         )
 
     def _validate(self, spark: SparkSession, step: dict, df: DataFrame) -> DataFrame:
-        refs_cfg = step.get("referentials") or step.get("refs") or {}
+        refs_cfg = step.get("referentials") or {}
         rules: list[Rule] = []
         exists_cols: list[str] = []
         for name, cfg in (step.get("rules") or {}).items():
@@ -1348,10 +1274,7 @@ class Pipeline:
             if execute:
                 write_stdout(out, limit=int(conn["limit"]) if conn.get("limit") else None)
             return WriteResult("stdout", "cli", out)
-        raw_path = conn["path"]
-        if _METADATA_HOLE.search(raw_path):
-            raw_path = _resolve_metadata_holes(raw_path, doc.get("type", "json"))
-        fmt = doc.get("type", _guess_format(raw_path))
+        raw_path, fmt, options = _document_target(conn["path"], doc)
         partition_cols = _MUSTACHE_PATH.findall(raw_path)
         # strip the file-name component: Spark writes directories
         path = re.sub(r"[^/]*\{\{.*$", "", raw_path) if partition_cols else raw_path
@@ -1371,7 +1294,7 @@ class Pipeline:
                 )
             if execute:
                 self._write_stream_local(
-                    out, path, fmt, doc, mode, partition_cols,
+                    out, path, fmt, options, mode, partition_cols,
                     checkpoint=step.get("checkpoint"),
                 )
             return WriteResult(path, fmt, out)
@@ -1389,17 +1312,8 @@ class Pipeline:
                     _, fs, dest = _hadoop_fs(out.sparkSession, path)
                     if fs.exists(dest):
                         fs.delete(dest, False)
-                from chewdata_spark.sources.documents import metadata_options
-
-                append_single_file(
-                    out,
-                    path,
-                    fmt,
-                    options={**metadata_options(doc), **(doc.get("options") or {})},
-                )
+                append_single_file(out, path, fmt, options=options)
             else:
-                from chewdata_spark.sources.documents import metadata_options
-
                 zcols = step.get("zorder_by")
                 towrite = out
                 if zcols:
@@ -1417,7 +1331,7 @@ class Pipeline:
                     fmt,
                     mode=mode,
                     partition_by=partition_cols or None,
-                    options={**metadata_options(doc), **(doc.get("options") or {})},
+                    options=options,
                 )
         return WriteResult(path, fmt, out)
 
@@ -1426,7 +1340,7 @@ class Pipeline:
         out: DataFrame,
         path: str,
         fmt: str,
-        doc: dict,
+        options: dict[str, str],
         mode: str,
         partition_cols: list[str],
         *,
@@ -1446,13 +1360,8 @@ class Pipeline:
         when an eraser folded in) and appends after."""
         import tempfile
 
-        from chewdata_spark.sources.documents import (
-            metadata_options,
-            write_document,
-        )
         from chewdata_spark.streaming.ops import run_foreach_batch
 
-        opts = {**metadata_options(doc), **(doc.get("options") or {})}
         complete = self.stream_output_mode == "complete"
 
         def fn(batch_df: DataFrame, batch_id: int) -> None:
@@ -1463,7 +1372,7 @@ class Pipeline:
             )
             write_document(
                 batch_df, path, fmt, mode=m,
-                partition_by=partition_cols or None, options=opts,
+                partition_by=partition_cols or None, options=options,
             )
 
         run_foreach_batch(
@@ -1544,6 +1453,18 @@ def _guess_format(path: str) -> str:
 
 
 _METADATA_HOLE = re.compile(r"\{\{\s*metadata\.(\w+)\s*\}\}")
+
+
+def _document_target(path: str, doc: dict) -> tuple[str, str, dict[str, str]]:
+    """A step's document target: the path with its metadata holes
+    resolved, the format (declared, else guessed from the path) and the
+    Spark options (translated ``metadata``, then ``document.options``
+    over them)."""
+    from chewdata_spark.sources.documents import metadata_options
+
+    path = _resolve_metadata_holes(path, doc.get("type", "json"))
+    fmt = doc.get("type", _guess_format(path))
+    return path, fmt, {**metadata_options(doc), **(doc.get("options") or {})}
 
 
 def _resolve_metadata_holes(path: str, fmt: str) -> str:

@@ -604,9 +604,6 @@ def _hll_report(est: DataFrame, exact: DataFrame) -> DataFrame:
     )
 
 
-_STREAM_HLL_RUN = {"n": 0}
-
-
 def stream_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The HLL sketch maintained AS STRUCTURED STREAMING STATE: events
     arrive as a file stream and the stateful complete-mode aggregation
@@ -620,6 +617,8 @@ def stream_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     (HLL_SQL) checks the streaming runtime bit-for-bit."""
     import os
 
+    from chewdata_spark.streaming.ops import run_to_memory
+
     path = os.path.join(sf_dir, "events.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(path).schema
@@ -627,17 +626,7 @@ def stream_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     regs = hll_registers(
         stream.select("event_type", "user_id"), "event_type", "user_id"
     )
-    _STREAM_HLL_RUN["n"] += 1
-    name = f"_stream_hll_{_STREAM_HLL_RUN['n']}"
-    q = (
-        regs.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    est = hll_estimate(spark.table(name))
+    est = hll_estimate(run_to_memory(regs, "_stream_hll", output_mode="complete"))
     exact = (
         load_table(spark, sf_dir, "events")
         .groupBy("event_type")

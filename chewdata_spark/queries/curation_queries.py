@@ -204,10 +204,9 @@ def stream_mix_config(spark: SparkSession, sf_dir: str) -> DataFrame:
     ])
     p = Pipeline.from_json(cfg, spark)
     stream = p.dataframe().select("doc_id", "lang", "source", "epoch")
-    _STREAM_RUN["n"] += 1
     return run_to_memory(
         stream,
-        f"_stream_mix_config_{_STREAM_RUN['n']}",
+        "_stream_mix_config",
         output_mode=p.stream_output_mode,
     )
 
@@ -313,9 +312,6 @@ FROM documents
 """
 
 
-_STREAM_RUN = {"n": 0}
-
-
 def stream_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The curation funnel executed BY STRUCTURED STREAMING: the same
     lang/quality/token-band filters run over a file stream
@@ -328,6 +324,7 @@ def stream_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from chewdata_spark.operators.text import _lang_pred_expr, _quality_expr, _tokens
+    from chewdata_spark.streaming.ops import run_to_memory
 
     path = os.path.join(sf_dir, "documents.parquet")
     schema = spark.read.parquet(path).schema
@@ -349,17 +346,7 @@ def stream_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("quality").alias("quality"),
         F.min("n_tokens").alias("n_tokens"),
     )
-    _STREAM_RUN["n"] += 1
-    name = f"_stream_curate_corpus_{_STREAM_RUN['n']}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(agg, "_stream_curate_corpus", output_mode="complete")
 
 
 def _stream_curate_sql() -> str:
@@ -857,10 +844,9 @@ def stream_curate_config(spark: SparkSession, sf_dir: str) -> DataFrame:
     ])
     p = Pipeline.from_json(cfg, spark)
     stream = p.dataframe().select("doc_id", "lang", "source")
-    _STREAM_RUN["n"] += 1
     return run_to_memory(
         stream,
-        f"_stream_curate_config_{_STREAM_RUN['n']}",
+        "_stream_curate_config",
         output_mode=p.stream_output_mode,
     )
 
@@ -924,10 +910,9 @@ def stream_decontam_config(spark: SparkSession, sf_dir: str) -> DataFrame:
     ])
     p = Pipeline.from_json(cfg, spark)
     stream = p.dataframe().select("doc_id", "lang", "source")
-    _STREAM_RUN["n"] += 1
     return run_to_memory(
         stream,
-        f"_stream_decontam_config_{_STREAM_RUN['n']}",
+        "_stream_decontam_config",
         output_mode=p.stream_output_mode,
     )
 
@@ -1070,8 +1055,7 @@ def stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors = stream.join(seen, "_h", "left_anti").select(
         "doc_id", "lang", "source"
     )
-    _STREAM_RUN["n"] += 1
-    return run_to_memory(survivors, f"_stream_ingest_dedup_{_STREAM_RUN['n']}")
+    return run_to_memory(survivors, "_stream_ingest_dedup")
 
 
 STREAM_INGEST_DEDUP_SQL = """
@@ -1119,10 +1103,9 @@ def stream_ingest_config(spark: SparkSession, sf_dir: str) -> DataFrame:
     ])
     p = Pipeline.from_json(cfg, spark)
     stream = p.dataframe().select("doc_id", "lang", "source")
-    _STREAM_RUN["n"] += 1
     return run_to_memory(
         stream,
-        f"_stream_ingest_config_{_STREAM_RUN['n']}",
+        "_stream_ingest_config",
         output_mode=p.stream_output_mode,
     )
 
@@ -1831,6 +1814,7 @@ def stream_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         md5_hex16,
         synthetic_classifier_weights,
     )
+    from chewdata_spark.streaming.ops import run_to_memory
 
     path = os.path.join(sf_dir, "documents.parquet")
     schema = spark.read.parquet(path).schema
@@ -1854,18 +1838,8 @@ def stream_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("int").alias("n_tokens"),
         F.sum("c").alias("_dot"),
     )
-    _STREAM_RUN["n"] += 1
-    name = f"_stream_classifier_{_STREAM_RUN['n']}"
-    q = (
-        scored.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     logit = F.col("_dot") / F.col("n_tokens")
-    return spark.table(name).select(
+    return run_to_memory(scored, "_stream_classifier", output_mode="complete").select(
         "doc_id",
         "n_tokens",
         F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)), 6).alias("clf_score"),
@@ -2169,9 +2143,8 @@ def stream_corpus_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = spark.read.parquet(path).schema
     stream = spark.readStream.schema(schema).parquet(path + "*")
     agg = _manifest_agg(stream)
-    _STREAM_RUN["n"] += 1
     return run_to_memory(
-        agg, f"_stream_manifest_{_STREAM_RUN['n']}", output_mode="complete"
+        agg, "_stream_manifest", output_mode="complete"
     )
 
 

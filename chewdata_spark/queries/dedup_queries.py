@@ -2097,9 +2097,6 @@ QUERIES["dedup_incremental_ingest_sa"] = dedup_incremental_ingest_sa
 ORACLES["dedup_incremental_ingest_sa"] = INCREMENTAL_INGEST_SA_SQL
 
 
-_SA_STREAM_RUN = {"n": 0}
-
-
 def _sa_seen_bucket_arrays(
     spark, sf_dir, *, max_chars, bucket_len, max_bucket, obs_prefix,
     full_doc=False,
@@ -2298,7 +2295,6 @@ def stream_ingest_dedup_sa(spark: SparkSession, sf_dir: str) -> DataFrame:
         "max_shared_len",
         (F.col("max_shared_len") < min_len).alias("kept"),
     )
-    _SA_STREAM_RUN["n"] += 1
     # a stream-static join re-executes the static side EVERY micro-batch
     # — and executing the aggregation pipeline INSIDE a micro-batch is
     # far slower than as a plain batch job (no AQE, no exchange reuse
@@ -2313,7 +2309,7 @@ def stream_ingest_dedup_sa(spark: SparkSession, sf_dir: str) -> DataFrame:
     seen_arr.count()
     try:
         return run_to_memory(
-            out, f"_stream_ingest_dedup_sa_{_SA_STREAM_RUN['n']}",
+            out, "_stream_ingest_dedup_sa",
             output_mode="complete",
         )
     finally:
@@ -2954,7 +2950,6 @@ def _stream_cut_spans_sa(
     per_doc, seen_arr = _stream_cut_spans_sa_marks(
         spark, sf_dir, full_doc=full_doc
     )
-    _SA_STREAM_RUN["n"] += 1
     kind = "full" if full_doc else "head"
     # persist AND materialize the static bucket arrays before the
     # stream starts — a stream-static join re-executes the static side
@@ -2967,7 +2962,7 @@ def _stream_cut_spans_sa(
     seen_arr.count()
     try:
         marks = run_to_memory(
-            per_doc, f"_stream_cut_spans_sa_{kind}_{_SA_STREAM_RUN['n']}",
+            per_doc, f"_stream_cut_spans_sa_{kind}",
             output_mode="complete",
         )
     finally:

@@ -152,9 +152,6 @@ GROUP BY event_type
 """
 
 
-_STREAM_RUN = {"n": 0}
-
-
 def stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly event counts computed BY STRUCTURED STREAMING (availableNow
     over the same parquet, complete-mode window aggregation, memory
@@ -163,6 +160,8 @@ def stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from pyspark.sql import functions as F
+
+    from chewdata_spark.streaming.ops import run_to_memory
 
     path = os.path.join(sf_dir, "events.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -181,17 +180,7 @@ def stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts_us", "1 hour"), "event_type")
         .count()
     )
-    _STREAM_RUN["n"] += 1
-    name = f"_stream_events_hourly_{_STREAM_RUN['n']}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
+    return run_to_memory(agg, "_stream_events_hourly", output_mode="complete").select(
         F.col("window.start").alias("hour_start"),
         "event_type",
         F.col("count").alias("n"),
@@ -245,11 +234,9 @@ def stream_view_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark="1 hour",
         time_bound="1 hour",
     ).filter(F.col("purchase_ts") >= F.col("view_ts"))
-    _STREAM_RUN["n"] += 1
-    name = f"_stream_view_to_purchase_{_STREAM_RUN['n']}"
     return run_to_memory(
         joined.select(views["user_id"].alias("user_id"), "view_id", "purchase_id"),
-        name,
+        "_stream_view_to_purchase",
     )
 
 
@@ -287,9 +274,7 @@ def stream_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.session_window("ts_n", "30 minutes"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    _STREAM_RUN["n"] += 1
-    name = f"_stream_sessionize_{_STREAM_RUN['n']}"
-    out = run_to_memory(agg, name, output_mode="complete")
+    out = run_to_memory(agg, "_stream_sessionize", output_mode="complete")
     return out.select(
         "user_id",
         F.col("session_window.start").alias("session_start"),
@@ -577,9 +562,6 @@ QUERIES["media_dhash_dedup"] = media_dhash_dedup
 ORACLES["media_dhash_dedup"] = MEDIA_DHASH_SQL
 
 
-_STREAM_DHASH_RUN = {"n": 0}
-
-
 def stream_media_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual image dedup executed BY STRUCTURED STREAMING: images
     arrive as a file stream (availableNow), the REAL Arrow-batched
@@ -595,6 +577,7 @@ def stream_media_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from chewdata_spark.operators import multimodal
+    from chewdata_spark.streaming.ops import run_to_memory
 
     path = os.path.join(sf_dir, "documents.parquet")
     schema = spark.read.parquet(path).schema
@@ -604,24 +587,12 @@ def stream_media_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = hashed.groupBy("dhash").agg(
         F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("keeper")
     )
-    _STREAM_DHASH_RUN["n"] += 1
-    name = f"_stream_media_dhash_{_STREAM_DHASH_RUN['n']}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).filter(F.col("n_docs") >= 2)
+    out = run_to_memory(agg, "_stream_media_dhash", output_mode="complete")
+    return out.filter(F.col("n_docs") >= 2)
 
 
 QUERIES["stream_media_dhash_dedup"] = stream_media_dhash_dedup
 ORACLES["stream_media_dhash_dedup"] = MEDIA_DHASH_SQL
-
-
-_STREAM_Z_RUN = {"n": 0}
 
 
 def stream_events_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -651,8 +622,7 @@ def stream_events_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.abs(z) >= 3.0)
         .select("event_id", "event_type", F.round(z, 6).alias("zscore"))
     )
-    _STREAM_Z_RUN["n"] += 1
-    return run_to_memory(flagged, f"_stream_events_zscore_{_STREAM_Z_RUN['n']}")
+    return run_to_memory(flagged, "_stream_events_zscore")
 
 
 STREAM_ZSCORE_SQL = """
@@ -1395,9 +1365,6 @@ QUERIES["parts_entity_resolution_incremental"] = parts_entity_resolution_increme
 ORACLES["parts_entity_resolution_incremental"] = ENTITY_RESOLUTION_INCREMENTAL_SQL
 
 
-_STREAM_ER_RUN = {"n": 0}
-
-
 def stream_parts_entity_resolution(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1475,12 +1442,7 @@ def stream_parts_entity_resolution(
             (F.col("m.pri") == 2).alias("is_new_entity"),
         )
     )
-    _STREAM_ER_RUN["n"] += 1
-    return run_to_memory(
-        assign,
-        f"_stream_parts_er_{_STREAM_ER_RUN['n']}",
-        output_mode="complete",
-    )
+    return run_to_memory(assign, "_stream_parts_er", output_mode="complete")
 
 
 STREAM_ENTITY_RESOLUTION_SQL = """

@@ -927,9 +927,6 @@ QUERIES["contamination_grain_agreement"] = contamination_grain_agreement
 ORACLES["contamination_grain_agreement"] = _grain_agreement_sql()
 
 
-_BPE_STREAM_RUN = {"n": 0}
-
-
 def stream_ingest_dedup_sa_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING twin of dedup_incremental_ingest_sa_bpe — the
     stream x BPE cell of the ingest matrix: odd-id docs arrive as a
@@ -1057,7 +1054,6 @@ def stream_ingest_dedup_sa_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "max_shared_pieces",
         (F.col("max_shared_pieces") < _BPE_SA_MIN_PIECES).alias("kept"),
     )
-    _BPE_STREAM_RUN["n"] += 1
     # one batch-mode compute of the static side, cached across
     # micro-batches (the stream-static join re-executes it otherwise)
     from pyspark import StorageLevel
@@ -1066,7 +1062,7 @@ def stream_ingest_dedup_sa_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     seen_arr.count()
     try:
         return run_to_memory(
-            out, f"_stream_ingest_dedup_sa_bpe_{_BPE_STREAM_RUN['n']}",
+            out, "_stream_ingest_dedup_sa_bpe",
             output_mode="complete",
         )
     finally:

@@ -14,6 +14,7 @@ pipeline's write_document) works unchanged.
 
 from __future__ import annotations
 
+import itertools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,12 +31,17 @@ def read_stream_directory(
     options: dict[str, str] | None = None,
 ) -> DataFrame:
     """File-source stream: new files under `path` become micro-batches
-    (the streaming analogue of the reader step's wildcard paginator)."""
-    reader = spark.readStream.schema(schema).options(**(options or {}))
+    (the streaming analogue of the reader step's wildcard paginator).
+    CSV starts from the batch reader's defaults; ``options`` override
+    them."""
+    from chewdata_spark.sources.documents import CSV_READ_DEFAULTS
+
+    defaults = CSV_READ_DEFAULTS if fmt == "csv" else {}
+    reader = spark.readStream.schema(schema).options(**{**defaults, **(options or {})})
     if fmt in ("json", "jsonl"):
         return reader.json(path)
     if fmt == "csv":
-        return reader.options(header=True).csv(path)
+        return reader.csv(path)
     if fmt == "parquet":
         return reader.parquet(path)
     if fmt == "text":
@@ -133,10 +139,16 @@ def stream_stream_join(
     return lw.join(rw, cond, how)
 
 
+# suffixes that make every memory sink's name unique in the process
+_SINK_IDS = itertools.count(1)
+
+
 def run_to_memory(stream: DataFrame, name: str, *, output_mode: str = "append") -> DataFrame:
     """Run the stream to completion over currently-available data
     (Trigger.AvailableNow) into an in-memory table; returns the result
     as a batch DataFrame.  Used by tests and interactive inspection.
+    The sink is named ``name`` plus a process-unique suffix, so callers
+    may pass the same name on every run.
 
     The memory sink's table is COPIED to checkpointed blocks and the
     temp view dropped before returning: every call uses a fresh name,
@@ -146,6 +158,7 @@ def run_to_memory(stream: DataFrame, name: str, *, output_mode: str = "append") 
     the 'late-session aging' class the r13/r14 timing forensics kept
     hitting.  The checkpointed copy is value-identical and freed by
     the ContextCleaner once the returned DataFrame is unreachable."""
+    name = f"{name}_{next(_SINK_IDS)}"
     q = (
         stream.writeStream.format("memory")
         .queryName(name)

@@ -4,7 +4,9 @@ from __future__ import annotations
 
 import json
 
-from chewdata_spark.pipeline import Pipeline
+import pytest
+
+from chewdata_spark.pipeline import _CURATE_METHODS, Pipeline
 from chewdata_spark.sources.documents import read_document
 
 from tests.test_documents import canon_rows
@@ -950,6 +952,79 @@ def test_curate_step_rejects_unknown_method(spark):
     ]
     with _pytest.raises(ValueError, match="unsupported curate method"):
         Pipeline(cfg, spark).dataframe()
+
+
+@pytest.fixture(scope="module")
+def curate_src(spark, tmp_path_factory):
+    """One small parquet document set, read batch or as a stream."""
+    path = str(tmp_path_factory.mktemp("curate_src") / "docs")
+    spark.createDataFrame(
+        [(1, "a b c", "en")], "id int, text string, lang string"
+    ).write.parquet(path)
+    return path
+
+
+def _curate_error(spark, src, step, *, stream=False):
+    """Compile reader -> curate step; the ValueError text, or None."""
+    rd = {"type": "reader", "connector": {"type": "local", "path": src},
+          "document": {"type": "parquet"}, "stream": stream}
+    try:
+        Pipeline([rd, {"type": "curate", **step}], spark).dataframe()
+    except ValueError as e:
+        return str(e)
+    return None
+
+
+@pytest.mark.parametrize("method", sorted(_CURATE_METHODS))
+def test_curate_method_table_checks(spark, curate_src, method):
+    """Every method of the curate table: an unknown option is rejected
+    by name, a missing key exactly when the method needs one, and a
+    non-streaming method under a stream reader."""
+    spec = _CURATE_METHODS[method]
+    err = _curate_error(spark, curate_src, {"method": method, "key": "id", "bogus_opt": 1})
+    assert err is not None and "bogus_opt" in err
+    err = _curate_error(spark, curate_src, {"method": method})
+    assert (err is not None and "needs 'key'" in err) == spec.needs_key, err
+    err = _curate_error(spark, curate_src, {"method": method, "key": "id"}, stream=True)
+    assert (err is not None and "not stream-capable" in err) == (not spec.streams), err
+
+
+def test_curate_unknown_method_under_stream_reader(spark, curate_src):
+    err = _curate_error(spark, curate_src, {"method": "nope"}, stream=True)
+    assert err is not None and "unsupported curate method 'nope'" in err
+
+
+def test_object_config_rejected_when_parsed():
+    """A config that is one object, not a step list, fails at parse
+    time with the same error in JSON and YAML."""
+    for parse, text in [(Pipeline.from_json, '{"type": "r"}'),
+                        (Pipeline.from_config, '{"type": "r"}'),
+                        (Pipeline.from_config, "type: r")]:
+        with pytest.raises(ValueError, match="config must be a list of steps"):
+            parse(text)
+
+
+def test_curate_step_sa_pipeline_max_bucket_null_means_no_cap(spark):
+    """``"max_bucket": null`` runs sa_pipeline without the hot-bucket
+    cap, as it does for minhash_dedup: on a corpus whose buckets all fit
+    under the default cap the output equals the default run's."""
+    passage = "a passage of well over thirty characters shared by every document"
+    rows = [{"doc_id": i, "text": f"document {i} opens here. {passage}. closing words {i}"}
+            for i in range(1, 5)]
+
+    def run(**opts):
+        cfg = [
+            {"type": "reader", "connector": {"type": "in_memory", "data": json.dumps(rows)}},
+            {"type": "curate", "method": "sa_pipeline", "key": "doc_id", "field": "text",
+             "grain": "char", **opts},
+        ]
+        return sorted(tuple(r) for r in Pipeline(cfg, spark).dataframe().collect())
+
+    uncapped = run(max_bucket=None)
+    assert uncapped == run()
+    # every document is kept, and the repeat is cut from each
+    assert [r[0] for r in uncapped] == [1, 2, 3, 4]
+    assert not any(passage in r[-1] for r in uncapped)
 
 
 def test_example_configs_compile_and_run(spark):

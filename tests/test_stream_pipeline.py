@@ -24,18 +24,13 @@ from chewdata_spark.streaming.ops import run_to_memory
 
 SF = os.environ.get("CHEWDATA_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-_RUN = {"n": 0}
-
 
 def _collect_stream(p: Pipeline, cols=None):
     df = p.dataframe()
     assert df.isStreaming
     if cols:
         df = df.select(*cols)
-    _RUN["n"] += 1
-    out = run_to_memory(
-        df, f"_tsp_{_RUN['n']}", output_mode=p.stream_output_mode
-    )
+    out = run_to_memory(df, "_tsp", output_mode=p.stream_output_mode)
     return sorted(tuple(r) for r in out.collect())
 
 
@@ -816,3 +811,52 @@ def test_stream_exact_dedup_custom_fields_signature(spark, tmp_path):
     got = _collect_stream(Pipeline(cfg(True), spark))
     assert sorted(r[0] for r in batch) == [1, 2]  # min key per lang
     assert got == batch
+
+
+@pytest.mark.parametrize("stream", [False, True], ids=["batch", "stream"])
+def test_exact_dedup_null_keys_smallest_non_null_survives(spark, tmp_path, stream):
+    """NULL keys order last: each content group keeps the row with its
+    smallest non-NULL key, and a group whose keys are all NULL keeps
+    one of its rows whole, in batch and under a stream reader."""
+    src = os.path.join(str(tmp_path), "nk_src")
+    spark.createDataFrame(
+        [(None, "a"), (None, "a"), (1, "b"), (None, "b"), (2, "c")],
+        "id int, string string",
+    ).coalesce(1).write.parquet(src)
+    cfg = [
+        {"type": "reader", "stream": stream,
+         "connector": {"type": "local", "path": src},
+         "document": {"type": "parquet"}},
+        {"type": "curate", "method": "exact_dedup", "key": "id", "field": "string"},
+    ]
+    p = Pipeline(cfg, spark)
+    out = p.dataframe()
+    if stream:
+        out = run_to_memory(out, "_tsp_null_keys", output_mode=p.stream_output_mode)
+    got = sorted((tuple(r) for r in out.collect()), key=lambda r: r[1])
+    assert got == [(None, "a"), (1, "b"), (2, "c")]
+
+
+@pytest.mark.parametrize(
+    "metadata, columns, rows",
+    [({"delimiter": ";"}, ["a", "b"], [(1, "x"), (2, "y")]),
+     ({"delimiter": ";", "has_headers": False}, ["_c0", "_c1"],
+      [("1", "x"), ("2", "y"), ("a", "b")])],
+    ids=["delimiter", "no_headers"],
+)
+def test_stream_csv_reader_honours_document_metadata(spark, tmp_path, metadata, columns, rows):
+    """A ``stream: true`` CSV reader reads with the document metadata
+    and the batch reader's CSV defaults, so it returns the batch rows."""
+    src = tmp_path / "in.csv"
+    src.write_text("a;b\n1;x\n2;y\n")
+
+    def cfg(stream):
+        return [{"type": "reader", "stream": stream,
+                 "connector": {"type": "local", "path": str(src)},
+                 "document": {"type": "csv", "metadata": metadata}}]
+
+    batch = Pipeline(cfg(False), spark).dataframe()
+    streamed = run_to_memory(Pipeline(cfg(True), spark).dataframe(), "_tsp_csv")
+    assert batch.columns == streamed.columns == columns
+    assert sorted(tuple(r) for r in batch.collect()) == rows
+    assert sorted(tuple(r) for r in streamed.collect()) == rows

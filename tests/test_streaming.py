@@ -134,3 +134,14 @@ def test_idempotent_batch_fn_skips_replayed_ids(spark, tmp_path):
     fn(df, 1)
     fn(df, 0)  # replay — must be skipped
     assert applied == [0, 1]
+
+
+def test_stream_query_leaves_no_memory_sink_view(spark, sf_dir):
+    """Registry streaming queries drain through ``run_to_memory``,
+    which drops the memory sink's temp view: no run's rows stay pinned
+    in driver memory for the session."""
+    from chewdata_spark.queries.extra import stream_events_hourly
+
+    assert stream_events_hourly(spark, sf_dir).count() > 0
+    left = [t.name for t in spark.catalog.listTables() if t.name.startswith("_stream_")]
+    assert left == []
