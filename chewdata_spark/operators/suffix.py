@@ -65,7 +65,10 @@ reassembly SQL), ``kw`` (the public kwarg names of the window,
 threshold and bucket, for error messages), and the ``sa_pipeline``
 settings ``defaults``, ``alphabet``, ``pieces``, ``evidence``,
 ``tiled`` and ``scores``.  Each public char/token function is a thin
-binding of one grain-generic stage function.
+binding of one grain-generic stage function.  The streaming
+contamination scorer (``_seen_bucket_arrays`` + ``_stream_scores``,
+which the streaming queries call) runs over the same adapters and
+shares the batch scorer's seen suffixes, hot-bucket cap and LCP score.
 """
 
 from __future__ import annotations
@@ -960,17 +963,58 @@ def _contamination_scores(
         )
         if enc is not None:
             new_docs, seen_docs = enc
-    prefix = g.slice(F.col("suf"), 1, bucket)
-    new_suf = _suffixes(g, new_docs, max_units).withColumn("_bk", prefix)
-    seen_suf = (
-        _suffixes(g, seen_docs, max_units)
-        .select("suf")
-        .distinct()
-        .withColumn("_bk", prefix)
+    new_suf = _suffixes(g, new_docs, max_units).withColumn(
+        "_bk", g.slice(F.col("suf"), 1, bucket)
     )
     return _neighbour_scores(
-        g, new_suf, seen_suf, max_bucket=max_bucket, cap=max_units
+        g,
+        new_suf,
+        _seen_suffixes(g, seen_docs, max_units, bucket),
+        max_bucket=max_bucket,
+        cap=max_units,
     )
+
+
+def _seen_suffixes(g: _Grain, docs: DataFrame, cap: int, bucket: int) -> DataFrame:
+    """(suf, _bk): the DISTINCT ``cap``-unit suffixes of ``docs`` with
+    their first-``bucket``-unit prefix bucket — the seen side of every
+    contamination scorer, batch and stream."""
+    return (
+        _suffixes(g, docs, cap)
+        .select("suf")
+        .distinct()
+        .withColumn("_bk", g.slice(F.col("suf"), 1, bucket))
+    )
+
+
+def _capped_buckets(seen_suf: DataFrame, max_bucket: int, obs: str) -> DataFrame:
+    """(_bk): the buckets of ``seen_suf`` holding at most
+    ``max_bucket`` seen suffixes — the hot-bucket cap of every
+    contamination scorer, batch and stream (see
+    :func:`sa_contamination_scores`).  The count of dropped buckets
+    rides the plan as the ``<obs>_<n>/dropped_hot_buckets`` observe
+    metric."""
+    from chewdata_spark.operators.dedup import _OBS_SEQ
+
+    sizes = seen_suf.groupBy("_bk").agg(
+        F.count(F.lit(1)).alias("_n")
+    ).observe(
+        f"{obs}_{next(_OBS_SEQ)}",
+        F.sum(
+            F.when(F.col("_n") > max_bucket, F.lit(1)).otherwise(F.lit(0))
+        ).alias("dropped_hot_buckets"),
+    )
+    return sizes.filter(F.col("_n") <= max_bucket).select("_bk")
+
+
+def _lcp_score(g: _Grain, cap: int) -> Column:
+    """``m``: the longer LCP of ``suf`` with its seen neighbours
+    ``_pred``/``_succ`` (0 where a neighbour is missing), bounded by
+    ``cap`` units."""
+    return F.greatest(*[
+        F.when(F.col(nb).isNotNull(), F.expr(g.lcp(b=nb, cap=cap))).otherwise(0)
+        for nb in ("_pred", "_succ")
+    ]).cast("int").alias("m")
 
 
 def _neighbour_scores(
@@ -1011,20 +1055,12 @@ def _neighbour_scores(
     seen_suf = seen_suf.localCheckpoint(eager=False)
     occupied = None
     if max_bucket is not None:
-        sizes = seen_suf.groupBy("_bk").agg(
-            F.count(F.lit(1)).alias("_n")
-        ).observe(
-            f"sa_ingest_{next(_OBS_SEQ)}",
-            F.sum(
-                F.when(F.col("_n") > max_bucket, F.lit(1)).otherwise(F.lit(0))
-            ).alias("dropped_hot_buckets"),
-        )
         # the kept-bucket set IS the occupied-bucket set of the capped
-        # relation (sizes only holds buckets with >= 1 seen suffix), so
+        # relation (it only holds buckets with >= 1 seen suffix), so
         # the salt table below rides this tiny bucket-grain relation
         # instead of re-aggregating distinct buckets from the capped
         # seen rows
-        occupied = sizes.filter(F.col("_n") <= max_bucket).select("_bk")
+        occupied = _capped_buckets(seen_suf, max_bucket, "sa_ingest")
         seen_suf = seen_suf.join(occupied, "_bk", "left_semi")
     # the seen-side cap bounds the SEEN rows per bucket, but the window
     # below would still land every ARRIVING row of a bucket on one task
@@ -1110,15 +1146,110 @@ def _neighbour_scores(
         u.withColumn("_pred", pred)
         .withColumn("_succ", succ)
         .filter(F.col("_seen") == 0)
-        .select(
-            "doc_id",
-            "off",
-            F.greatest(*[
-                F.when(
-                    F.col(nb).isNotNull(), F.expr(g.lcp(b=nb, cap=cap))
-                ).otherwise(0)
-                for nb in ("_pred", "_succ")
-            ]).cast("int").alias("m"),
+        .select("doc_id", "off", _lcp_score(g, cap))
+    )
+
+
+def _seen_bucket_arrays(
+    g: _Grain, docs: DataFrame, *, cap: int, bucket: int, max_bucket: int,
+    obs: str,
+) -> DataFrame:
+    """(_bk, arr): the static seen side of the STREAMING contamination
+    scorer (:func:`_stream_scores`) — the distinct ``cap``-unit
+    suffixes of ``docs`` (``doc_id``, ``<g.col>``) grouped to ONE
+    sorted array row per prefix bucket.  A stream cannot window across
+    rows, so arrivals bisect these arrays instead.  A bucket's width
+    is a row's width, so the hot-bucket cap applies BEFORE the
+    collect: a boilerplate bucket never builds an unbounded row, and
+    the drop count rides the ``<obs>_<n>/dropped_hot_buckets`` observe
+    metric, the batch scorer's cap mirrored by the same oracle
+    HAVING.  Stream-static joins re-execute the static side every
+    micro-batch, so callers persist and materialize it before the
+    stream starts."""
+    seen_suf = _seen_suffixes(g, docs, cap, bucket)
+    return (
+        seen_suf.join(
+            _capped_buckets(seen_suf, max_bucket, obs), "_bk", "left_semi"
+        )
+        .groupBy("_bk")
+        .agg(F.sort_array(F.collect_list("suf")).alias("arr"))
+    )
+
+
+def _stream_scores(
+    g: _Grain, arrivals: DataFrame, seen_arr: DataFrame, *, cap: int,
+    bucket: int, max_bucket: int,
+) -> DataFrame:
+    """(doc_id, off, m): the STREAMING contamination scorer.  Each
+    position of an arriving ``(doc_id, <g.col>)`` row takes its
+    ``cap``-unit suffix, joins its bucket's sorted array from
+    :func:`_seen_bucket_arrays` and bisects it (:func:`_bs_neighbours`)
+    for ``pred`` = greatest seen <= suf and ``succ`` = least seen >
+    suf — exactly the batch window's seen-before-new tie order, so the
+    batch scorer's oracle replays the stream.  The join is
+    stream-static and stateless.  An arrival with no units keeps one
+    row with ``off`` NULL and ``m`` 0."""
+    units = F.col(g.col)
+    n = g.size(units)
+    off = F.col("off")
+    suf = (
+        arrivals.withColumn(
+            "off", F.explode_outer(F.when(n > 0, F.sequence(F.lit(1), n)))
+        )
+        .withColumn("suf", F.when(off.isNotNull(), g.slice(units, off, cap)))
+        .withColumn("_bk", g.slice(F.col("suf"), 1, bucket))
+    )
+    nb = _bs_neighbours(
+        suf.join(seen_arr, "_bk", "left"), max_bucket=max_bucket
+    )
+    return nb.select("doc_id", "off", _lcp_score(g, cap))
+
+
+def _bs_neighbours(df: DataFrame, *, max_bucket: int) -> DataFrame:
+    """Adds ``_pred``/``_succ`` — the greatest seen suffix <= ``suf``
+    and the least seen suffix > ``suf`` inside the SORTED bucket array
+    ``arr`` — via a fixed-depth binary search: O(log ``max_bucket``)
+    compares per arriving suffix.  An earlier revision used two
+    ``filter()`` scans (``array_max(filter(arr, x -> x <= suf))``),
+    which cost O(|arr|) compares per arrival — the hot bucket then
+    multiplied |arr| into every one of its arrivals (~100 s of the
+    sf0.1 full-doc stream's wall-clock).  Sortedness makes them equal:
+    with ``ub`` = count of elements <= ``suf`` (classic upper-bound
+    bisection), ``pred = arr[ub]`` and ``succ = arr[ub+1]``.  The
+    iteration count covers ``size(arr) <= max_bucket`` (the cap is
+    enforced BEFORE the collect); extra iterations are no-ops once
+    lo == hi.  Randomized equivalence vs the filter device:
+    tests/test_span_winnowing.py::test_bs_neighbours_equal_filter_scan.
+    """
+    import math
+
+    iters = max(1, math.ceil(math.log2(max_bucket + 1))) + 1
+    ub = f"""
+    IF(suf IS NULL OR arr IS NULL, NULL,
+      aggregate(
+        sequence(1, {iters}),
+        named_struct('lo', 0, 'hi', size(arr)),
+        (a, i) -> CASE
+            WHEN a.lo >= a.hi THEN a
+            WHEN element_at(arr, CAST((a.lo + a.hi + 1) DIV 2 AS INT)) <= suf
+                THEN named_struct(
+                    'lo', CAST((a.lo + a.hi + 1) DIV 2 AS INT), 'hi', a.hi)
+            ELSE named_struct(
+                'lo', a.lo, 'hi', CAST((a.lo + a.hi + 1) DIV 2 AS INT) - 1)
+        END,
+        a -> a.lo))
+    """
+    return (
+        df.withColumn("_ub", F.expr(ub))
+        .withColumn(
+            "_pred", F.expr("IF(_ub >= 1, element_at(arr, _ub), NULL)")
+        )
+        .withColumn(
+            "_succ",
+            F.expr(
+                "IF(_ub IS NOT NULL AND _ub < size(arr), "
+                "element_at(arr, _ub + 1), NULL)"
+            ),
         )
     )
 

@@ -48,145 +48,10 @@ def _modules():
     )
 
 
-# Names the correctness driver has already hard-checked in some round
-# (union of CORRECTNESS_r01..r07 keys).  The driver samples ~50 names
-# per round in registry order, so all_queries() leads with the NAMES
-# NOT in this set — never-sampled queries get driver coverage first and
-# the backlog drains round over round.  Update after each round.
-_DRIVER_CHECKED = {
-    "ann_ivf_topk", "ann_ivfpq_topk", "ann_matryoshka_ivf_topk",
-    "ann_matryoshka_topk", "ann_recall_report", "ann_srp_topk",
-    "ann_srp_topk_md5",
-    "approx_distinct_users", "best_of_source_sample", "bigram_logprob_score",
-    "bloom_seen_hashes", "bm25_search_topk", "bpe_encode_documents",
-    "bpe_merge_rules", "ccnet_perplexity_buckets", "cdc_chunk_dedup",
-    "char_entropy_junk_filter", "chunk_documents", "chunk_documents_udtf",
-    "churned_customers", "classifier_quality_filter",
-    "contamination_by_source", "contamination_evidence_topk",
-    "contamination_grain_agreement",
-    "contamination_ranked_pairs", "content_fingerprint",
-    "copurchase_communities", "copurchase_kcore", "copurchase_triangles",
-    "corpus_diff_manifest", "corpus_manifest", "corpus_summary_report",
-    "corpus_top_terms", "corpus_vocab_ids", "corpus_zipf_fit", "cosine_topk",
-    "countmin_sketch_terms", "cube_order_stats", "curate_corpus",
-    "curate_config_decontam_sa", "curate_config_decontam_sa_tokens",
-    "curate_pipeline_decontam_sa", "curate_pipeline_decontam_sa_bpe",
-    "curate_pipeline_decontam_sa_tokens",
-    "curate_pipeline_full", "curate_pipeline_full_sa",
-    "curation_audit_report", "curriculum_phases",
-    "customer_order_stats", "customer_rfm_segments",
-    "customer_spend_quartiles", "customers_with_open_orders",
-    "customers_without_orders", "dataset_card_manifest",
-    "decontaminate_cut_spans_sa", "decontaminate_cut_spans_sa_full",
-    "decontaminate_cut_spans_sa_tokens",
-    "decontaminate_docs", "decontaminate_docs_sa",
-    "dedup_clean_corpus", "dedup_clean_corpus_cc", "dedup_clean_corpus_lsh",
-    "dedup_clean_corpus_lsh_cc", "dedup_clean_corpus_lsh_cc_md5",
-    "dedup_clean_corpus_semantic", "dedup_cluster_components",
-    "dedup_consensus_pairs", "dedup_containment_md5", "dedup_cut_spans_corpus",
-    "dedup_cut_spans_sa", "dedup_cut_spans_sa_bpe",
-    "dedup_cut_spans_sa_full",
-    "dedup_cut_spans_sa_tokens", "dedup_cut_spans_sa_tokens_full",
-    "dedup_duplicate_spans", "dedup_exact", "dedup_fingerprint",
-    "dedup_incremental_ingest", "dedup_incremental_ingest_md5",
-    "dedup_incremental_ingest_sa", "dedup_incremental_ingest_sa_bpe",
-    "dedup_incremental_ingest_sa_tokens", "dedup_keep_best_quality",
-    "dedup_jaccard_prefix", "dedup_lines_global", "dedup_lines_within_doc",
-    "dedup_minhash_lsh", "dedup_minhash_lsh_md5", "dedup_ngram_jaccard",
-    "dedup_simhash", "dedup_simhash_md5", "distinct_users_by_type",
-    "distinct_users_linear_count", "docs_embeddings_alignment",
-    "documents_blocklist_hits", "documents_longest_repeats",
-    "documents_longest_repeats_tokens", "documents_profile",
-    "documents_redact_pii", "documents_repeat_profile",
-    "documents_repeat_spans", "documents_repeat_spans_full",
-    "documents_repeat_spans_tokens",
-    "documents_strip_boilerplate", "doremi_source_weights", "dp_noisy_counts",
-    "dpo_preference_pairs", "dsir_importance", "embedding_anisotropy_report",
-    "embedding_centroids", "embedding_debias_abtt", "embedding_near_dup",
-    "embedding_near_dup_clustered", "embedding_outliers_mahalanobis",
-    "embedding_pc1", "error_channel_split", "event_transition_matrix",
-    "events_anomaly_mad", "events_asof_orders", "events_cusum_drift",
-    "events_ewma_daily", "events_gap_fill", "events_heatmap_dow_hour",
-    "events_histogram_equidepth", "events_holt_winters",
-    "events_hourly_rollup", "events_missing_props", "events_ohlc_hourly",
-    "events_props_extract", "events_props_variant", "events_quantile_sketch",
-    "events_rolling_24h", "events_seasonal_decompose", "events_sliding_rate",
-    "events_value_zscore", "events_winsorized", "filter_agreement_matrix",
-    "filter_docs_logprob", "fim_transform_documents", "fingerprint_winnowing",
-    "forget_users_audit", "generator_duplicate", "generator_faker",
-    "gopher_quality_report", "hard_negatives_topk", "hashed_bow_features",
-    "heaps_law_fit", "hll_distinct_users_md5", "hybrid_search_topk",
-    "join_cardinality_estimate", "k_anonymity_report",
-    "kmeans_centroids_2iter", "kmv_set_intersection", "language_id",
-    "language_id_confusion", "length_bucket_batches", "loyal_customers",
-    "market_basket_pairs", "media_decode_dims", "media_dhash_dedup",
-    "mix_corpus_weighted", "monthly_revenue_trend", "multigrain_distinct_hll",
-    "nb_quality_scores", "nb_train_quality_weights", "ngram_novelty_probe",
-    "normalize_documents", "open_orderlines_peak",
-    "order_priority_grouping_sets", "orders_near_price_left",
-    "orders_upsert_merge", "pack_sequences", "packed_sequence_layout",
-    "pagerank_order_graph", "part_name_similarity", "part_name_tokens",
-    "part_transit_conflicts", "parts_entity_resolution",
-    "parts_entity_resolution_incremental", "parts_in_price_band",
-    "parts_pareto_8020", "parts_skyline", "pivot_order_status",
-    "pq_code_embeddings", "price_percentiles", "q10_returned_items",
-    "q11_important_parts", "q12_ship_delay_priority",
-    "q13_customer_order_distribution", "q14_promo_revenue", "q15_top_supplier",
-    "q16_supplier_count", "q17_small_quantity_revenue",
-    "q18_large_volume_customers", "q19_disjunctive_revenue",
-    "q1_pricing_summary", "q20_dominant_shippers", "q21_waiting_orders",
-    "q22_dormant_rich_customers", "q2_min_cost_supplier",
-    "q3_shipping_priority", "q4_late_order_priority",
-    "q5_local_supplier_volume", "q6_forecast_revenue", "q7_volume_shipping",
-    "q8_market_share", "q9_profit_by_nation", "qty_price_correlation",
-    "quality_score", "quantize_embeddings", "referential_lookup",
-    "repetition_stats", "rollup_revenue", "rrf_fusion_topk",
-    "running_daily_revenue", "salted_event_stats", "sentence_segments",
-    "sessionize_events", "sft_loss_mask_layout", "shard_shuffle_corpus",
-    "shuffle_skew_audit", "signup_conversion_funnel",
-    "source_concentration_hhi", "source_distinctive_terms",
-    "source_drift_kl", "source_dup_rate",
-    "source_overlap_matrix", "source_quota_sample", "source_vocab_health",
-    "split_embedding_leakage", "split_leakage_audit", "split_train_val_test",
-    "stratified_sample", "stream_classifier_scores", "stream_corpus_manifest",
-    "stream_curate_config", "stream_curate_corpus",
-    "stream_decontam_config", "stream_events_hourly", "stream_events_zscore",
-    "stream_cut_spans_sa", "stream_cut_spans_sa_full",
-    "stream_hll_distinct_users", "stream_ingest_config",
-    "stream_ingest_dedup",
-    "stream_ingest_dedup_sa", "stream_ingest_dedup_sa_bpe",
-    "stream_media_dhash_dedup", "stream_mix_config",
-    "stream_parts_entity_resolution",
-    "stream_sessionize_events", "stream_view_to_purchase",
-    "supplier_reliability", "table_stats_report", "temperature_mix_weights",
-    "text_stats", "tfidf_keywords", "token_counts", "tokenize_documents",
-    "tokenizer_fertility", "top_orders_per_customer", "top_value_orders",
-    "training_mix_schedule", "transformer_actions", "unigram_lm_pieces",
-    "unigram_logprob", "url_canonicalize_dedup", "user_event_gaps",
-    "user_retention_cohorts", "user_state_history", "validator_rules",
-    "video_frame_sample_report", "vocab_coverage_curve",
-    "weighted_sample_quality", "wordpiece_segments_top", "zorder_layout_audit",
-}
-
-
-# Names the driver should sample FIRST next round (before other
-# unchecked names).  Empty as of the round-13 open: CORRECTNESS_r12
-# folded above gives 266/266 registry coverage — every registered name
-# has been driver-hard-checked at least once, with zero wrong answers
-# at latest status for the third round running.
-_DRIVER_BACKLOG: tuple[str, ...] = ()
-
-
 def all_queries() -> dict[str, QueryFn]:
-    merged: dict[str, QueryFn] = {}
+    out: dict[str, QueryFn] = {}
     for mod in _modules():
-        merged.update(mod.QUERIES)
-    out = {n: merged[n] for n in _DRIVER_BACKLOG if n in merged}
-    out.update(
-        (n, f) for n, f in merged.items()
-        if n not in _DRIVER_CHECKED and n not in out
-    )
-    out.update((n, f) for n, f in merged.items() if n in _DRIVER_CHECKED)
+        out.update(mod.QUERIES)
     return out
 
 

@@ -2963,12 +2963,109 @@ def curate_pipeline_decontam_sa_bpe(
     )
 
 
-def _curate_pipeline_decontam_bpe_sql() -> str:
+def _decontam_units_sql(
+    mid: str,
+    *,
+    g: int,
+    cmp_len: int,
+    bucket_len: int,
+    rel: str,
+    units: str | None,
+    toks: str,
+    spine: str,
+    unit: str,
+    bench: str,
+    out: str,
+) -> str:
+    """The composed five-stage oracle of the token- and BPE-grain
+    decontaminating flagships: normalize + line dedup, whole
+    >= ``g``-unit repeat marks over the training unit lists ``toks``,
+    >= ``g``-unit runs shared with the benchmark (the token scoring
+    CTEs over ``rel``, ``units`` its unit-list column), ONE island
+    merge + unit splice into ``out``, and the per-source quota over
+    the ``spine`` docs.  ``mid`` holds the grain's CTEs between the
+    benchmark slice and the repeat grams (the piece encode for BPE);
+    ``unit`` and ``bench`` word the merge comment."""
     from chewdata_spark.queries.dedup_queries import (
         _ISLAND_COV_CTES,
-        _sa_scoring_ctes_tokens,
+        _SQL_TOKEN,
+        _sa_scoring_ctes,
     )
     from chewdata_spark.queries.text_queries import _normalize_sql
+
+    norm_select = _normalize_sql().strip().rstrip(";")
+    gm1 = g - 1
+    a = spine.split()[-1]
+    scoring = _sa_scoring_ctes(
+        _SQL_TOKEN,
+        new_where="doc_id % 2 = 1", seen_where="doc_id % 2 = 0",
+        with_off=True, full_doc=True, cmp_len=cmp_len,
+        bucket_len=bucket_len, max_bucket=10_000,
+        new_rel=rel, seen_rel=rel, units=units, lead=",",
+    )
+    return (
+        _norm_lined_ctes(where_sql="doc_id % 2 = 1")
+        + f""",
+seenrel AS (
+    SELECT doc_id, norm_text AS text
+    FROM ({norm_select}) WHERE doc_id % 2 = 0
+)"""
+        + mid
+        + f""", gg AS (
+    SELECT doc_id, off, list_slice(toks, off, off + {gm1}) AS gram
+    FROM (SELECT doc_id, toks,
+                 unnest(generate_series(1, len(toks) - {gm1})) AS off
+          FROM {toks} WHERE len(toks) >= {g})
+), dup AS (
+    SELECT gram FROM gg GROUP BY gram HAVING COUNT(*) >= 2
+)"""
+        + scoring
+        + f""", marked AS (
+    -- merged criteria at {unit} grain: whole >= {g}-{unit} repeats
+    -- within training UNION >= {g}-{unit} runs shared with the
+    -- {bench}
+    SELECT doc_id, off AS s, off + {gm1} AS e FROM gg JOIN dup USING (gram)
+    UNION ALL
+    SELECT doc_id, off AS s, off + m - 1 AS e FROM scored WHERE m >= {g}
+)"""
+        + _ISLAND_COV_CTES
+        + f""", tpos AS (
+    SELECT doc_id, toks[i] AS w, i
+    FROM (SELECT doc_id, toks,
+                 unnest(generate_series(1, len(toks))) AS i FROM {toks})
+), keep AS (
+    SELECT t.doc_id,
+           COALESCE(string_agg(t.w, ' ' ORDER BY t.i)
+                    FILTER (WHERE c.i IS NULL), '') AS {out},
+           COUNT(*) FILTER (WHERE c.i IS NOT NULL) AS n_cut
+    FROM tpos t LEFT JOIN cov c ON t.doc_id = c.doc_id AND t.i = c.i
+    GROUP BY t.doc_id
+), nsp AS (
+    SELECT doc_id, COUNT(*) AS n_spans FROM spans GROUP BY doc_id
+), dc AS (
+    SELECT {a}.doc_id,
+           COALESCE(k.{out}, '') AS {out},
+           CAST(COALESCE(n.n_spans, 0) AS INT) AS n_spans,
+           CAST(COALESCE(k.n_cut, 0) AS INT) AS n_cut
+    FROM {spine}
+    LEFT JOIN keep k USING (doc_id)
+    LEFT JOIN nsp n USING (doc_id)
+),
+-- final stage: per-source quota (deterministic md5 order, cap 15)
+q AS (
+    SELECT c.doc_id, d.lang, d.source, c.{out}, c.n_spans, c.n_cut,
+           ROW_NUMBER() OVER (
+               PARTITION BY d.source
+               ORDER BY md5('0:' || CAST(c.doc_id AS VARCHAR)), c.doc_id) AS rnk
+    FROM dc c JOIN documents d USING (doc_id)
+)
+SELECT doc_id, lang, source, {out}, n_spans, n_cut
+FROM q WHERE rnk <= 15
+"""
+    )
+
+
+def _curate_pipeline_decontam_bpe_sql() -> str:
     from chewdata_spark.queries.bpe_sql import (
         _BPE_SA_ITERS,
         _BPE_SA_MIN_PIECES,
@@ -2976,8 +3073,6 @@ def _curate_pipeline_decontam_bpe_sql() -> str:
         _bpe_seg_ctes,
     )
 
-    norm_select = _normalize_sql().strip().rstrip(";")
-    g = _BPE_SA_MIN_PIECES
     # union vocabulary: training words at real frequency, benchmark-
     # only words at freq 0 (parity-merged, argmax-invisible)
     words_sql = """    SELECT word, CAST(SUM(freq) AS BIGINT) AS freq FROM (
@@ -2991,20 +3086,8 @@ def _curate_pipeline_decontam_bpe_sql() -> str:
               FROM seenrel)
         WHERE word <> ''
     ) GROUP BY 1"""
-    scoring = _sa_scoring_ctes_tokens(
-        new_where="doc_id % 2 = 1", seen_where="doc_id % 2 = 0",
-        with_off=True, full_doc=True, cmp_tokens=64,
-        bucket_tokens=4, max_bucket=10_000,
-        rel="pall", tk_expr="toks", lead=",",
-    )
-    return (
-        _norm_lined_ctes(where_sql="doc_id % 2 = 1")
-        + f""",
-seenrel AS (
-    SELECT doc_id, norm_text AS text
-    FROM ({norm_select}) WHERE doc_id % 2 = 0
-)"""
-        + _bpe_seg_ctes(_BPE_SA_ITERS, words_sql)
+    mid = (
+        _bpe_seg_ctes(_BPE_SA_ITERS, words_sql)
         + """, bothrel AS (
     SELECT doc_id, text FROM lined
     UNION ALL
@@ -3013,55 +3096,12 @@ seenrel AS (
         + _bpe_piece_stream_sql("bothrel", "btoks", "pall")
         + """, ptr AS (
     SELECT doc_id, toks FROM pall WHERE doc_id % 2 = 1
-), gg AS (
-    SELECT doc_id, off, list_slice(toks, off, off + {gm1}) AS gram
-    FROM (SELECT doc_id, toks,
-                 unnest(generate_series(1, len(toks) - {gm1})) AS off
-          FROM ptr WHERE len(toks) >= {g})
-), dup AS (
-    SELECT gram FROM gg GROUP BY gram HAVING COUNT(*) >= 2
-)""".format(g=g, gm1=g - 1)
-        + scoring
-        + """, marked AS (
-    -- merged criteria at piece grain: whole >= {g}-piece repeats
-    -- within training UNION >= {g}-piece runs shared with the
-    -- benchmark piece streams
-    SELECT doc_id, off AS s, off + {gm1} AS e FROM gg JOIN dup USING (gram)
-    UNION ALL
-    SELECT doc_id, off AS s, off + m - 1 AS e FROM scored WHERE m >= {g}
-)""".format(g=g, gm1=g - 1) + _ISLAND_COV_CTES + """, tpos AS (
-    SELECT doc_id, toks[i] AS w, i
-    FROM (SELECT doc_id, toks,
-                 unnest(generate_series(1, len(toks))) AS i FROM ptr)
-), keep AS (
-    SELECT t.doc_id,
-           COALESCE(string_agg(t.w, ' ' ORDER BY t.i)
-                    FILTER (WHERE c.i IS NULL), '') AS clean_pieces,
-           COUNT(*) FILTER (WHERE c.i IS NOT NULL) AS n_cut
-    FROM tpos t LEFT JOIN cov c ON t.doc_id = c.doc_id AND t.i = c.i
-    GROUP BY t.doc_id
-), nsp AS (
-    SELECT doc_id, COUNT(*) AS n_spans FROM spans GROUP BY doc_id
-), dc AS (
-    SELECT a.doc_id,
-           COALESCE(k.clean_pieces, '') AS clean_pieces,
-           CAST(COALESCE(n.n_spans, 0) AS INT) AS n_spans,
-           CAST(COALESCE(k.n_cut, 0) AS INT) AS n_cut
-    FROM ptr a
-    LEFT JOIN keep k USING (doc_id)
-    LEFT JOIN nsp n USING (doc_id)
-),
--- final stage: per-source quota (deterministic md5 order, cap 15)
-q AS (
-    SELECT c.doc_id, d.lang, d.source, c.clean_pieces, c.n_spans, c.n_cut,
-           ROW_NUMBER() OVER (
-               PARTITION BY d.source
-               ORDER BY md5('0:' || CAST(c.doc_id AS VARCHAR)), c.doc_id) AS rnk
-    FROM dc c JOIN documents d USING (doc_id)
-)
-SELECT doc_id, lang, source, clean_pieces, n_spans, n_cut
-FROM q WHERE rnk <= 15
-"""
+)"""
+    )
+    return _decontam_units_sql(
+        mid, g=_BPE_SA_MIN_PIECES, cmp_len=64, bucket_len=4,
+        rel="pall", units="toks", toks="ptr", spine="ptr a",
+        unit="piece", bench="benchmark piece streams", out="clean_pieces",
     )
 
 
@@ -3110,27 +3150,7 @@ def curate_pipeline_decontam_sa_tokens(
 
 
 def _curate_pipeline_decontam_tokens_sql() -> str:
-    from chewdata_spark.queries.dedup_queries import (
-        _ISLAND_COV_CTES,
-        _sa_scoring_ctes_tokens,
-    )
-    from chewdata_spark.queries.text_queries import _normalize_sql
-
-    norm_select = _normalize_sql().strip().rstrip(";")
-    g, gm1 = 5, 4
-    scoring = _sa_scoring_ctes_tokens(
-        new_where="doc_id % 2 = 1", seen_where="doc_id % 2 = 0",
-        with_off=True, full_doc=True, cmp_tokens=32,
-        bucket_tokens=2, max_bucket=10_000,
-        rel="tall", lead=",",
-    )
-    return (
-        _norm_lined_ctes(where_sql="doc_id % 2 = 1")
-        + f""",
-seenrel AS (
-    SELECT doc_id, norm_text AS text
-    FROM ({norm_select}) WHERE doc_id % 2 = 0
-), tall AS (
+    mid = """, tall AS (
     SELECT doc_id, text FROM lined
     UNION ALL
     SELECT doc_id, text FROM seenrel
@@ -3138,57 +3158,11 @@ seenrel AS (
     SELECT doc_id,
            string_split_regex(trim(COALESCE(text, '')), '\\s+') AS toks
     FROM lined
-), gg AS (
-    SELECT doc_id, off, list_slice(toks, off, off + {gm1}) AS gram
-    FROM (SELECT doc_id, toks,
-                 unnest(generate_series(1, len(toks) - {gm1})) AS off
-          FROM ltk WHERE len(toks) >= {g})
-), dup AS (
-    SELECT gram FROM gg GROUP BY gram HAVING COUNT(*) >= 2
 )"""
-        + scoring
-        + f""", marked AS (
-    -- merged criteria at token grain: whole >= {g}-token repeats
-    -- within training UNION >= {g}-token runs shared with the
-    -- normalized benchmark slice
-    SELECT doc_id, off AS s, off + {gm1} AS e FROM gg JOIN dup USING (gram)
-    UNION ALL
-    SELECT doc_id, off AS s, off + m - 1 AS e FROM scored WHERE m >= {g}
-)"""
-        + _ISLAND_COV_CTES
-        + """, tpos AS (
-    SELECT doc_id, toks[i] AS w, i
-    FROM (SELECT doc_id, toks,
-                 unnest(generate_series(1, len(toks))) AS i FROM ltk)
-), keep AS (
-    SELECT t.doc_id,
-           COALESCE(string_agg(t.w, ' ' ORDER BY t.i)
-                    FILTER (WHERE c.i IS NULL), '') AS clean_text,
-           COUNT(*) FILTER (WHERE c.i IS NOT NULL) AS n_cut
-    FROM tpos t LEFT JOIN cov c ON t.doc_id = c.doc_id AND t.i = c.i
-    GROUP BY t.doc_id
-), nsp AS (
-    SELECT doc_id, COUNT(*) AS n_spans FROM spans GROUP BY doc_id
-), dc AS (
-    SELECT l.doc_id,
-           COALESCE(k.clean_text, '') AS clean_text,
-           CAST(COALESCE(n.n_spans, 0) AS INT) AS n_spans,
-           CAST(COALESCE(k.n_cut, 0) AS INT) AS n_cut
-    FROM lined l
-    LEFT JOIN keep k USING (doc_id)
-    LEFT JOIN nsp n USING (doc_id)
-),
--- final stage: per-source quota (deterministic md5 order, cap 15)
-q AS (
-    SELECT c.doc_id, d.lang, d.source, c.clean_text, c.n_spans, c.n_cut,
-           ROW_NUMBER() OVER (
-               PARTITION BY d.source
-               ORDER BY md5('0:' || CAST(c.doc_id AS VARCHAR)), c.doc_id) AS rnk
-    FROM dc c JOIN documents d USING (doc_id)
-)
-SELECT doc_id, lang, source, clean_text, n_spans, n_cut
-FROM q WHERE rnk <= 15
-"""
+    return _decontam_units_sql(
+        mid, g=5, cmp_len=32, bucket_len=2,
+        rel="tall", units=None, toks="ltk", spine="lined l",
+        unit="token", bench="normalized benchmark slice", out="clean_text",
     )
 
 

@@ -7,6 +7,8 @@ full DuckDB oracles.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame, SparkSession
 
 from chewdata_spark.operators import dedup
@@ -15,7 +17,70 @@ from chewdata_spark.operators.suffix import _CHAR
 from chewdata_spark.tables import load_table
 
 
+@dataclass(frozen=True)
+class _SqlGrain:
+    """The grain-specific DuckDB fragments of :func:`_sa_scoring_ctes`.
+    Oracle-side by design: an oracle must not share code with the
+    engine it checks, so this is not the engine's ``_Grain``.
+    ``docs`` and ``suf`` are keyed by ``full_doc``: the docs-CTE body
+    (formatted with ``rel``, ``where``, ``cmp`` and ``units``) and the
+    per-position suffix; ``ne`` is the unit compare against the
+    neighbour ``nb``; ``note`` heads the cap-mirror CTE."""
+
+    unit: str
+    length: str
+    slice: str
+    docs: dict[bool, str]
+    suf: dict[bool, str]
+    ne: str
+    units: str = ""
+    note: str = ""
+
+
+_SQL_CHAR = _SqlGrain(
+    unit="t",
+    length="length",
+    slice="substr",
+    docs={
+        False: "SELECT doc_id, substr(text, 1, {cmp}) AS t FROM {rel}\n"
+               "    WHERE {where} AND text IS NOT NULL\n"
+               "      AND length(substr(text, 1, {cmp})) > 0",
+        True: "SELECT doc_id, COALESCE(text, '') AS t FROM {rel}\n"
+              "    WHERE {where} AND length(COALESCE(text, '')) > 0",
+    },
+    suf={False: "substr(t, off)", True: "substr(t, off, {cmp})"},
+    ne="substr(suf, i, 1) <> substr({nb}, i, 1)",
+    note="    -- hot-bucket cap mirror (max_bucket = {max_bucket}): a prefix "
+         "bucket\n    -- wider than the cap drops from the seen side before "
+         "neighbour-finding\n",
+)
+
+# token suffixes are DuckDB LISTS: list comparison is lexicographic
+# with shorter-prefix-first, the suffix convention
+_TOKEN_DOCS = (
+    "SELECT doc_id, tk0 AS tk\n"
+    "    FROM (SELECT doc_id, {sel} AS tk0 FROM {{rel}} WHERE {{where}})\n"
+    "    WHERE len(tk0) >= 1 AND (len(tk0) > 1 OR tk0[1] <> '')"
+)
+_SQL_TOKEN = _SqlGrain(
+    unit="tk",
+    length="len",
+    slice="list_slice",
+    docs={
+        False: _TOKEN_DOCS.format(sel="list_slice({units}, 1, {cmp})"),
+        True: _TOKEN_DOCS.format(sel="{units}"),
+    },
+    suf={
+        False: "list_slice(tk, off, off + {cmp} - 1)",
+        True: "list_slice(tk, off, off + {cmp} - 1)",
+    },
+    ne="suf[i] <> {nb}[i]",
+    units="string_split_regex(trim(COALESCE(text, '')), '\\s+')",
+)
+
+
 def _sa_scoring_ctes(
+    grain: _SqlGrain = _SQL_CHAR,
     *,
     new_where: str,
     seen_where: str,
@@ -26,37 +91,36 @@ def _sa_scoring_ctes(
     max_bucket: int = 10_000,
     new_rel: str = "documents",
     seen_rel: str = "documents",
+    units: str | None = None,
     lead: str = "WITH",
     prefix: str = "",
 ) -> str:
-    """The WITH-prefix shared by every incremental-SA oracle: arriving
-    and seen suffix relations, the hot-bucket cap mirror (HAVING on the
-    ``bucket_len``-char bucket grain), the per-bucket seen neighbours
+    """The WITH-prefix shared by every incremental-SA oracle, at char
+    (``_SQL_CHAR``) or token (``_SQL_TOKEN``) grain: arriving and seen
+    suffix relations, the hot-bucket cap mirror (HAVING on the
+    ``bucket_len``-unit bucket grain), the per-bucket seen neighbours
     (seen rows sort before new on ties), and the per-position shared
-    length ``m`` — ONE builder so the six consumer oracles cannot drift
-    on tie order, LCP fallback, or the cap.  ``with_off`` threads the
-    arriving position through (the span-cut and evidence oracles need
-    it); ``full_doc`` scans whole docs with ``cmp_len`` as the
-    per-suffix compare cap (see decontaminate_cut_spans_sa_full).
-    ``bucket_len``/``max_bucket`` MUST match the values the query
-    passes to the operator (sa_contamination_scores and friends) —
-    thread the same constants to both sides.  ``new_rel``/``seen_rel``
-    name the relations scanned (default the raw ``documents`` view;
-    composed oracles point them at earlier CTEs exposing
-    ``(doc_id, text)``), and ``lead`` lets the block continue an
-    existing WITH chain (pass ``lead=","``)."""
-    if full_doc:
-        t_new = "COALESCE(text, '') AS t"
-        w_new = f"{new_where} AND length(COALESCE(text, '')) > 0"
-        w_seen = f"{seen_where} AND length(COALESCE(text, '')) > 0"
-        suf = f"substr(t, off, {cmp_len})"
-    else:
-        t_new = f"substr(text, 1, {cmp_len}) AS t"
-        w_new = (f"{new_where} AND text IS NOT NULL\n"
-                 f"      AND length(substr(text, 1, {cmp_len})) > 0")
-        w_seen = (f"{seen_where} AND text IS NOT NULL\n"
-                  f"      AND length(substr(text, 1, {cmp_len})) > 0")
-        suf = "substr(t, off)"
+    length ``m`` in units — ONE builder so the consumer oracles cannot
+    drift on tie order, LCP fallback, or the cap.  ``with_off``
+    threads the arriving position through (the span-cut and evidence
+    oracles need it); ``full_doc`` scans whole docs with ``cmp_len``
+    as the per-suffix compare cap (see
+    decontaminate_cut_spans_sa_full).  ``cmp_len``/``bucket_len``/
+    ``max_bucket`` MUST match the values the query passes to the
+    operator (sa_contamination_scores and friends) — thread the same
+    constants to both sides.  ``new_rel``/``seen_rel`` name the
+    relations scanned (default the raw ``documents`` view; composed
+    oracles point them at earlier CTEs exposing ``(doc_id, text)``),
+    ``units`` replaces a token grain's whitespace split (the BPE-grain
+    oracles pass an encoded piece-list column), and ``lead`` lets the
+    block continue an existing WITH chain (pass ``lead=","``)."""
+    g = grain
+    fill = dict(cmp=cmp_len, units=units or g.units)
+    docs = g.docs[full_doc]
+    new_docs = docs.format(rel=new_rel, where=new_where, **fill)
+    seen_docs = docs.format(rel=seen_rel, where=seen_where, **fill)
+    suf = g.suf[full_doc].format(**fill)
+    bk = f"{g.slice}(suf, 1, {bucket_len})"
     if with_off:
         new_cols = "doc_id, off, " + suf + " AS suf"
         u_seen = ("SELECT CAST(NULL AS BIGINT) AS doc_id, "
@@ -73,28 +137,32 @@ def _sa_scoring_ctes(
         u_new = f"SELECT doc_id, suf, 0 AS is_seen FROM {prefix}newsuf"
         nb_cols = "doc_id, suf, is_seen"
         sc_cols = "doc_id"
+    least = "least({n}(suf), {n}({{nb}}))".format(n=g.length)
+    lcp = (
+        "CASE WHEN {nb} IS NULL THEN 0 ELSE\n"
+        "                COALESCE(([i FOR i IN generate_series(1,\n"
+        f"                               {least})\n"
+        f"                           IF {g.ne}])[1],\n"
+        f"                         {least} + 1) - 1 END"
+    )
     return f"""
 {lead} {prefix}newd AS (
-    SELECT doc_id, {t_new} FROM {new_rel}
-    WHERE {w_new}
+    {new_docs}
 ), {prefix}seend AS (
-    SELECT doc_id, {t_new} FROM {seen_rel}
-    WHERE {w_seen}
+    {seen_docs}
 ), {prefix}newsuf AS (
     SELECT {new_cols}
-    FROM (SELECT doc_id, t,
-                 unnest(generate_series(1, length(t))) AS off FROM {prefix}newd)
+    FROM (SELECT doc_id, {g.unit},
+                 unnest(generate_series(1, {g.length}({g.unit}))) AS off FROM {prefix}newd)
 ), {prefix}seensuf0 AS (
     SELECT DISTINCT {suf} AS suf
-    FROM (SELECT t, unnest(generate_series(1, length(t))) AS off FROM {prefix}seend)
+    FROM (SELECT {g.unit}, unnest(generate_series(1, {g.length}({g.unit}))) AS off FROM {prefix}seend)
 ), {prefix}okbk AS (
-    -- hot-bucket cap mirror (max_bucket = {max_bucket}): a prefix bucket
-    -- wider than the cap drops from the seen side before neighbour-finding
-    SELECT substr(suf, 1, {bucket_len}) AS bk FROM {prefix}seensuf0
+{g.note.format(max_bucket=max_bucket)}    SELECT {bk} AS bk FROM {prefix}seensuf0
     GROUP BY 1 HAVING COUNT(*) <= {max_bucket}
 ), {prefix}seensuf AS (
     SELECT s.suf FROM {prefix}seensuf0 s
-    JOIN {prefix}okbk k ON substr(s.suf, 1, {bucket_len}) = k.bk
+    JOIN {prefix}okbk k ON {g.slice}(s.suf, 1, {bucket_len}) = k.bk
 ), {prefix}u AS (
     {u_seen}
     UNION ALL
@@ -102,132 +170,19 @@ def _sa_scoring_ctes(
 ), {prefix}nb AS (
     SELECT {nb_cols},
         LAST_VALUE(CASE WHEN is_seen = 1 THEN suf END IGNORE NULLS) OVER (
-            PARTITION BY substr(suf, 1, {bucket_len})
+            PARTITION BY {bk}
             ORDER BY suf, is_seen DESC
             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pred,
         FIRST_VALUE(CASE WHEN is_seen = 1 THEN suf END IGNORE NULLS) OVER (
-            PARTITION BY substr(suf, 1, {bucket_len})
+            PARTITION BY {bk}
             ORDER BY suf, is_seen DESC
             ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS succ
     FROM {prefix}u
 ), {prefix}scored AS (
     SELECT {sc_cols},
         greatest(
-            CASE WHEN pred IS NULL THEN 0 ELSE
-                COALESCE(([i FOR i IN generate_series(1,
-                               least(length(suf), length(pred)))
-                           IF substr(suf, i, 1) <> substr(pred, i, 1)])[1],
-                         least(length(suf), length(pred)) + 1) - 1 END,
-            CASE WHEN succ IS NULL THEN 0 ELSE
-                COALESCE(([i FOR i IN generate_series(1,
-                               least(length(suf), length(succ)))
-                           IF substr(suf, i, 1) <> substr(succ, i, 1)])[1],
-                         least(length(suf), length(succ)) + 1) - 1 END
-        ) AS m
-    FROM {prefix}nb WHERE is_seen = 0
-)"""
-
-
-
-def _sa_scoring_ctes_tokens(
-    *,
-    new_where: str,
-    seen_where: str,
-    with_off: bool = False,
-    full_doc: bool = False,
-    cmp_tokens: int = 32,
-    bucket_tokens: int = 2,
-    max_bucket: int = 10_000,
-    rel: str = "documents",
-    tk_expr: str | None = None,
-    lead: str = "WITH",
-    prefix: str = "",
-) -> str:
-    """TOKEN-grain twin of :func:`_sa_scoring_ctes`: suffixes are
-    DuckDB LISTS (list comparison is lexicographic with shorter-prefix
-    -first — the suffix convention), the prefix bucket is the first
-    ``bucket_tokens`` tokens, and the per-position shared length ``m``
-    counts TOKENS.  Parameters must match the operator call
-    (sa_contamination_scores_tokens) exactly.  ``rel``/``tk_expr``
-    point the builder at another relation's token-list column (the
-    BPE-grain oracle passes the encoded piece relation); ``lead=","``
-    continues an existing WITH chain."""
-    if tk_expr is None:
-        tk_expr = "string_split_regex(trim(COALESCE(text, '')), '\\s+')"
-    if full_doc:
-        t_sel = f"{tk_expr} AS tk0"
-    else:
-        t_sel = f"list_slice({tk_expr}, 1, {cmp_tokens}) AS tk0"
-    w_new = new_where
-    w_seen = seen_where
-    suf = f"list_slice(tk, off, off + {cmp_tokens} - 1)"
-    if with_off:
-        new_cols = "doc_id, off, " + suf + " AS suf"
-        u_seen = ("SELECT CAST(NULL AS BIGINT) AS doc_id, "
-                  "CAST(NULL AS INT) AS off,\n           suf, 1 AS is_seen"
-                  f"\n    FROM {prefix}seensuf")
-        u_new = ("SELECT doc_id, CAST(off AS INT) AS off, suf, 0 AS is_seen "
-                 f"FROM {prefix}newsuf")
-        nb_cols = "doc_id, off, suf, is_seen"
-        sc_cols = "doc_id, off"
-    else:
-        new_cols = "doc_id, " + suf + " AS suf"
-        u_seen = ("SELECT CAST(NULL AS BIGINT) AS doc_id, suf, 1 AS is_seen "
-                  f"FROM {prefix}seensuf")
-        u_new = f"SELECT doc_id, suf, 0 AS is_seen FROM {prefix}newsuf"
-        nb_cols = "doc_id, suf, is_seen"
-        sc_cols = "doc_id"
-    nonempty = "len(tk0) >= 1 AND (len(tk0) > 1 OR tk0[1] <> '')"
-    return f"""
-{lead} {prefix}newd AS (
-    SELECT doc_id, tk0 AS tk
-    FROM (SELECT doc_id, {t_sel} FROM {rel} WHERE {w_new})
-    WHERE {nonempty}
-), {prefix}seend AS (
-    SELECT doc_id, tk0 AS tk
-    FROM (SELECT doc_id, {t_sel} FROM {rel} WHERE {w_seen})
-    WHERE {nonempty}
-), {prefix}newsuf AS (
-    SELECT {new_cols}
-    FROM (SELECT doc_id, tk,
-                 unnest(generate_series(1, len(tk))) AS off FROM {prefix}newd)
-), {prefix}seensuf0 AS (
-    SELECT DISTINCT {suf} AS suf
-    FROM (SELECT tk, unnest(generate_series(1, len(tk))) AS off FROM {prefix}seend)
-), {prefix}okbk AS (
-    SELECT list_slice(suf, 1, {bucket_tokens}) AS bk FROM {prefix}seensuf0
-    GROUP BY 1 HAVING COUNT(*) <= {max_bucket}
-), {prefix}seensuf AS (
-    SELECT s.suf FROM {prefix}seensuf0 s
-    JOIN {prefix}okbk k ON list_slice(s.suf, 1, {bucket_tokens}) = k.bk
-), {prefix}u AS (
-    {u_seen}
-    UNION ALL
-    {u_new}
-), {prefix}nb AS (
-    SELECT {nb_cols},
-        LAST_VALUE(CASE WHEN is_seen = 1 THEN suf END IGNORE NULLS) OVER (
-            PARTITION BY list_slice(suf, 1, {bucket_tokens})
-            ORDER BY suf, is_seen DESC
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pred,
-        FIRST_VALUE(CASE WHEN is_seen = 1 THEN suf END IGNORE NULLS) OVER (
-            PARTITION BY list_slice(suf, 1, {bucket_tokens})
-            ORDER BY suf, is_seen DESC
-            ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS succ
-    FROM {prefix}u
-), {prefix}scored AS (
-    SELECT {sc_cols},
-        greatest(
-            CASE WHEN pred IS NULL THEN 0 ELSE
-                COALESCE(([i FOR i IN generate_series(1,
-                               least(len(suf), len(pred)))
-                           IF suf[i] <> pred[i]])[1],
-                         least(len(suf), len(pred)) + 1) - 1 END,
-            CASE WHEN succ IS NULL THEN 0 ELSE
-                COALESCE(([i FOR i IN generate_series(1,
-                               least(len(suf), len(succ)))
-                           IF suf[i] <> succ[i]])[1],
-                         least(len(suf), len(succ)) + 1) - 1 END
+            {lcp.format(nb="pred")},
+            {lcp.format(nb="succ")}
         ) AS m
     FROM {prefix}nb WHERE is_seen = 0
 )"""
@@ -1161,9 +1116,10 @@ def dedup_incremental_ingest_sa_tokens(
     )
 
 
-INGEST_SA_TOKENS_SQL = _sa_scoring_ctes_tokens(
+INGEST_SA_TOKENS_SQL = _sa_scoring_ctes(
+    _SQL_TOKEN,
     new_where="doc_id % 2 = 1", seen_where="doc_id % 2 = 0",
-    cmp_tokens=32, bucket_tokens=2, max_bucket=10_000,
+    cmp_len=32, bucket_len=2, max_bucket=10_000,
 ) + """, gate AS (
     SELECT doc_id, MAX(m) AS ms FROM scored GROUP BY doc_id
 )
@@ -1206,10 +1162,11 @@ def decontaminate_cut_spans_sa_tokens(
     )
 
 
-DECONTAMINATE_CUT_SPANS_SA_TOKENS_SQL = _sa_scoring_ctes_tokens(
+DECONTAMINATE_CUT_SPANS_SA_TOKENS_SQL = _sa_scoring_ctes(
+    _SQL_TOKEN,
     new_where="doc_id % 2 = 1", seen_where="doc_id % 2 = 0",
     with_off=True, full_doc=True,
-    cmp_tokens=32, bucket_tokens=2, max_bucket=10_000,
+    cmp_len=32, bucket_len=2, max_bucket=10_000,
 ) + """, marked AS (
     SELECT doc_id, off AS s, off + m - 1 AS e FROM scored WHERE m >= 5
 )""" + _ISLAND_COV_CTES + """, alldocs AS (
@@ -2097,106 +2054,82 @@ QUERIES["dedup_incremental_ingest_sa"] = dedup_incremental_ingest_sa
 ORACLES["dedup_incremental_ingest_sa"] = INCREMENTAL_INGEST_SA_SQL
 
 
-def _sa_seen_bucket_arrays(
-    spark, sf_dir, *, max_chars, bucket_len, max_bucket, obs_prefix,
-    full_doc=False,
+def _sa_stream_char(
+    spark: SparkSession, sf_dir: str, *, max_chars: int, full_doc: bool,
+    obs: str,
 ):
-    """The static side shared by the streaming SA twins: the even-id
-    corpus's DISTINCT suffixes (head-window by default; every position
-    of whole docs with ``full_doc=True``, where ``max_chars`` becomes
-    the per-suffix compare cap and bucket width grows from <= 128/doc
-    to length(doc)/doc) grouped to (prefix bucket -> SORTED suffix
-    array), with hot buckets capped at ``max_bucket``
-    BEFORE the collect (so a boilerplate bucket never materializes an
-    unbounded array row) and the drop count riding the plan as the
-    ``<obs_prefix>_<n>/dropped_hot_buckets`` observe metric — the same
-    cap the batch twins apply, mirrored in the shared oracle HAVING."""
-    from pyspark.sql import functions as F
-
-    t = (
-        F.coalesce(F.col("text"), F.lit(""))
-        if full_doc
-        else F.substring("text", 1, max_chars)
-    )
-    seen_suf = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 2 == 0)
-        .select(t.alias("t"))
-        .filter(F.length("t") > 0)
-        .select("t", F.explode(F.expr("sequence(1, length(t))")).alias("off"))
-        .select(F.expr(f"substring(t, off, {max_chars})").alias("suf"))
-        .distinct()
-        .withColumn("_bk", F.substring("suf", 1, bucket_len))
-    )
-    sizes = seen_suf.groupBy("_bk").agg(
-        F.count(F.lit(1)).alias("_n")
-    ).observe(
-        f"{obs_prefix}_{next(_OBS_SEQ)}",
-        F.sum(
-            F.when(F.col("_n") > max_bucket, F.lit(1)).otherwise(F.lit(0))
-        ).alias("dropped_hot_buckets"),
-    )
-    return (
-        seen_suf.join(
-            sizes.filter(F.col("_n") <= max_bucket).select("_bk"),
-            "_bk",
-            "left_semi",
-        )
-        .groupBy("_bk")
-        .agg(F.sort_array(F.collect_list("suf")).alias("arr"))
-    )
-
-
-def _sa_bs_neighbours(df, *, max_bucket):
-    """Adds ``_pred``/``_succ`` — the greatest seen suffix <= ``suf``
-    and the least seen suffix > ``suf`` inside the SORTED bucket array
-    ``arr`` — via a fixed-depth binary search: O(log ``max_bucket``)
-    string compares per arriving suffix.  An earlier revision used two
-    ``filter()`` scans (``array_max(filter(arr, x -> x <= suf))``),
-    which cost O(|arr|) compares per arrival — the hot bucket then
-    multiplied |arr| into every one of its arrivals (~100 s of the
-    sf0.1 full-doc stream's wall-clock).  Sortedness makes them equal:
-    with ``ub`` = count of elements <= ``suf`` (classic upper-bound
-    bisection), ``pred = arr[ub]`` and ``succ = arr[ub+1]``.  The
-    iteration count covers ``size(arr) <= max_bucket`` (the cap is
-    enforced BEFORE the collect); extra iterations are no-ops once
-    lo == hi.  Randomized equivalence vs the filter device:
-    tests/test_span_winnowing.py::test_bs_neighbours_equal_filter_scan.
-    """
-    import math
+    """The char stream twins' scorer call: the even-id corpus is the
+    static seen side, the odd-id docs arrive as a file stream (text
+    head, or the whole text with ``full_doc``, ``max_chars`` then the
+    per-suffix compare cap), scored at the family's 8-char bucket and
+    10k hot-bucket cap (operators/suffix.py::_stream_scores).  Returns
+    ``(scored, seen_arr)``: the ``(doc_id, off, m)`` stream and the
+    static side, which the caller persists for the run."""
+    import os
 
     from pyspark.sql import functions as F
 
-    iters = max(1, math.ceil(math.log2(max_bucket + 1))) + 1
-    ub = f"""
-    IF(suf IS NULL OR arr IS NULL, NULL,
-      aggregate(
-        sequence(1, {iters}),
-        named_struct('lo', 0, 'hi', size(arr)),
-        (a, i) -> CASE
-            WHEN a.lo >= a.hi THEN a
-            WHEN element_at(arr, CAST((a.lo + a.hi + 1) DIV 2 AS INT)) <= suf
-                THEN named_struct(
-                    'lo', CAST((a.lo + a.hi + 1) DIV 2 AS INT), 'hi', a.hi)
-            ELSE named_struct(
-                'lo', a.lo, 'hi', CAST((a.lo + a.hi + 1) DIV 2 AS INT) - 1)
-        END,
-        a -> a.lo))
-    """
-    return (
-        df.withColumn("_ub", F.expr(ub))
-        .withColumn(
-            "_pred", F.expr("IF(_ub >= 1, element_at(arr, _ub), NULL)")
-        )
-        .withColumn(
-            "_succ",
-            F.expr(
-                "IF(_ub IS NOT NULL AND _ub < size(arr), "
-                "element_at(arr, _ub + 1), NULL)"
-            ),
-        )
+    from chewdata_spark.operators.suffix import (
+        _docs,
+        _seen_bucket_arrays,
+        _stream_scores,
     )
 
+    bucket_len, max_bucket = 8, 10_000
+    window = None if full_doc else max_chars
+    seen = load_table(spark, sf_dir, "documents").filter(
+        F.col("doc_id") % 2 == 0
+    )
+    seen_arr = _seen_bucket_arrays(
+        _CHAR, _docs(_CHAR, seen, "doc_id", "text", window),
+        cap=max_chars, bucket=bucket_len, max_bucket=max_bucket, obs=obs,
+    )
+    path = os.path.join(sf_dir, "documents.parquet")
+    text = F.coalesce(F.col("text"), F.lit(""))
+    arrivals = (
+        spark.readStream.schema(spark.read.parquet(path).schema)
+        .parquet(path + "*")
+        .filter(F.col("doc_id") % 2 == 1)
+        .select(
+            "doc_id",
+            (text if full_doc else F.substring(text, 1, max_chars)).alias("t"),
+        )
+        # a micro-batch inherits the FILE source's partitioning — one
+        # arriving file would run every downstream bisection on one
+        # task.  One narrow doc-grain shuffle (docs, not positions)
+        # decouples scoring parallelism from the arrival file layout.
+        .repartition(F.col("doc_id"))
+    )
+    scored = _stream_scores(
+        _CHAR, arrivals, seen_arr,
+        cap=max_chars, bucket=bucket_len, max_bucket=max_bucket,
+    )
+    return scored, seen_arr
+
+
+def _run_stream_static(
+    stream: DataFrame, seen_arr: DataFrame, name: str
+) -> DataFrame:
+    """Run a stream scored against the static ``seen_arr`` to memory
+    (complete mode, availableNow).  A stream-static join re-executes
+    the static side EVERY micro-batch — and executing the aggregation
+    pipeline INSIDE a micro-batch is far slower than as a plain batch
+    job (no AQE, no exchange reuse across the cap/observe branches).
+    So the bucket arrays are persisted AND materialized before the
+    stream starts: one batch-mode compute, then every micro-batch
+    reads the spillable cache.  At a scale where the arrays outgrow
+    cluster memory, write them to a compacted table once and stream
+    against that instead."""
+    from pyspark import StorageLevel
+
+    from chewdata_spark.streaming.ops import run_to_memory
+
+    seen_arr.persist(StorageLevel.MEMORY_AND_DISK)
+    seen_arr.count()
+    try:
+        return run_to_memory(stream, name, output_mode="complete")
+    finally:
+        seen_arr.unpersist()
 
 
 def stream_ingest_dedup_sa(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2207,14 +2140,14 @@ def stream_ingest_dedup_sa(spark: SparkSession, sf_dir: str) -> DataFrame:
     The batch twin finds seen neighbours with per-bucket windows; a
     stream can't window across rows, so the static side pre-aggregates
     to (bucket -> SORTED seen-suffix array) and each arriving suffix
-    bisects its bucket's array (``_sa_bs_neighbours``: upper-bound
-    binary search, O(log max_bucket) compares per arrival) for
-    ``pred`` = greatest seen <= suf / ``succ`` = least seen > suf —
+    bisects its bucket's array (operators/suffix.py::_stream_scores:
+    upper-bound binary search, O(log max_bucket) compares per arrival)
+    for ``pred`` = greatest seen <= suf / ``succ`` = least seen > suf —
     exactly the batch window's seen-before-new tie order, so the SAME
     oracle SQL replays both twins.  Stream-static join is stateless; the only
     stateful operator is the final per-doc max (complete mode,
-    availableNow into a memory sink).  ``explode_outer`` keeps
-    null/empty-text arrivals in the output at 0.
+    availableNow into a memory sink).  Null/empty-text arrivals stay
+    in the output at 0.
 
     SCALE CONTRACT (stream path): each static-side bucket materializes
     as ONE sorted array row, so a bucket's width IS a row's width — a
@@ -2227,93 +2160,20 @@ def stream_ingest_dedup_sa(spark: SparkSession, sf_dir: str) -> DataFrame:
     metric, and mirrored in the shared oracle's HAVING; raising
     ``bucket_len`` toward ``min_len`` splits hot buckets without
     recall loss."""
-    import os
-
     from pyspark.sql import functions as F
 
-    from chewdata_spark.operators.suffix import sa_incremental_contamination  # noqa: F401  (batch twin)
-    from chewdata_spark.streaming.ops import run_to_memory
-
-    max_chars, min_len, bucket_len, max_bucket = 128, 30, 8, 10_000
-    path = os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(path).schema
-    seen_arr = _sa_seen_bucket_arrays(
-        spark, sf_dir, max_chars=max_chars, bucket_len=bucket_len,
-        max_bucket=max_bucket, obs_prefix="sa_stream_ingest",
-    )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(path + "*")
-        .filter(F.col("doc_id") % 2 == 1)
-        .withColumn("t", F.substring("text", 1, max_chars))
-        # a micro-batch inherits the FILE source's partitioning — one
-        # arriving file would run every downstream bisection on one
-        # task.  One narrow doc-grain shuffle (docs, not positions)
-        # decouples scoring parallelism from the arrival file layout.
-        .select("doc_id", "t")
-        .repartition(F.col("doc_id"))
-        .withColumn(
-            "off",
-            F.explode_outer(
-                F.when(F.length("t") > 0, F.expr("sequence(1, length(t))"))
-            ),
-        )
-        .withColumn(
-            "suf",
-            F.when(
-                F.col("off").isNotNull(),
-                F.expr(f"substring(t, off, {max_chars})"),
-            ),
-        )
-        .withColumn("_bk", F.substring("suf", 1, bucket_len))
-    )
-    joined = stream.join(seen_arr, "_bk", "left")
-    nb = _sa_bs_neighbours(joined, max_bucket=max_bucket)
-    # r15: cap the LCP cursor at the true suffix length (suffixes are
-    # max_chars-windowed, so LCP <= max_chars by construction) — the
-    # default 256 cap paid two extra refinement steps whose first
-    # memcmp windows span the whole string (guide §1.2 step 2)
-    scored = nb.select(
-        "doc_id",
-        F.greatest(
-            F.when(
-                F.col("_pred").isNotNull(),
-                F.expr(_CHAR.lcp(b="_pred", cap=max_chars)),
-            ).otherwise(0),
-            F.when(
-                F.col("_succ").isNotNull(),
-                F.expr(_CHAR.lcp(b="_succ", cap=max_chars)),
-            ).otherwise(0),
-        ).alias("_m"),
+    scored, seen_arr = _sa_stream_char(
+        spark, sf_dir, max_chars=128, full_doc=False, obs="sa_stream_ingest"
     )
     per_doc = scored.groupBy("doc_id").agg(
-        F.max("_m").cast("int").alias("max_shared_len")
+        F.max("m").cast("int").alias("max_shared_len")
     )
     out = per_doc.select(
         "doc_id",
         "max_shared_len",
-        (F.col("max_shared_len") < min_len).alias("kept"),
+        (F.col("max_shared_len") < 30).alias("kept"),
     )
-    # a stream-static join re-executes the static side EVERY micro-batch
-    # — and executing the aggregation pipeline INSIDE a micro-batch is
-    # far slower than as a plain batch job (no AQE, no exchange reuse
-    # across the cap/observe branches).  Persist AND materialize the
-    # bucket arrays before the stream starts: one batch-mode compute,
-    # then every micro-batch reads the spillable cache.  At a scale
-    # where the arrays outgrow cluster memory, write them to a compacted
-    # table once and stream against that instead.
-    from pyspark import StorageLevel
-
-    seen_arr.persist(StorageLevel.MEMORY_AND_DISK)
-    seen_arr.count()
-    try:
-        return run_to_memory(
-            out, "_stream_ingest_dedup_sa",
-            output_mode="complete",
-        )
-    finally:
-        seen_arr.unpersist()
+    return _run_stream_static(out, seen_arr, "_stream_ingest_dedup_sa")
 
 
 QUERIES["stream_ingest_dedup_sa"] = stream_ingest_dedup_sa
@@ -2816,8 +2676,8 @@ def stream_cut_spans_sa(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same static-side device as the ingest twin: the even-id corpus
     pre-aggregates to (prefix bucket -> sorted seen-suffix array, hot
     buckets capped at 10k BEFORE the collect), each arriving suffix
-    bisects its bucket's array for pred/succ (``_sa_bs_neighbours``),
-    and positions sharing >= 30 chars mark ``[off, off+m-1]``.  A stream cannot window per doc, so the island merge +
+    bisects its bucket's array for pred/succ
+    (operators/suffix.py::_stream_scores), and positions sharing >= 30 chars mark ``[off, off+m-1]``.  A stream cannot window per doc, so the island merge +
     cut collapse into ONE ``aggregate()`` cursor over the doc's own
     sorted (possibly overlapping) marks — the cursor skips covered
     chars, counts islands, and splices the tail beyond the 128-char
@@ -2860,76 +2720,20 @@ def _stream_cut_spans_sa_marks(
     Returns ``(marks_stream, seen_arr)`` — the caller persists
     ``seen_arr`` for the run (stream-static joins re-execute the static
     side per micro-batch)."""
-    import os
-
     from pyspark.sql import functions as F
 
-    max_chars = 64 if full_doc else 128
-    min_len, bucket_len, max_bucket = 30, 8, 10_000
-    path = os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(path).schema
-    seen_arr = _sa_seen_bucket_arrays(
-        spark, sf_dir, max_chars=max_chars, bucket_len=bucket_len,
-        max_bucket=max_bucket, obs_prefix="sa_stream_cut",
-        full_doc=full_doc,
-    )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(path + "*")
-        .filter(F.col("doc_id") % 2 == 1)
-        .withColumn("ft", F.coalesce(F.col("text"), F.lit("")))
-        .withColumn(
-            "t",
-            F.col("ft") if full_doc else F.substring("ft", 1, max_chars),
-        )
-        # decouple scoring parallelism from the arrival file layout:
-        # one narrow doc-grain shuffle BEFORE the position explode (see
-        # stream_ingest_dedup_sa — same device, same reason)
-        .select("doc_id", "t")
-        .repartition(F.col("doc_id"))
-        .withColumn(
-            "off",
-            F.explode_outer(
-                F.when(F.length("t") > 0, F.expr("sequence(1, length(t))"))
-            ),
-        )
-        .withColumn(
-            "suf",
-            F.when(
-                F.col("off").isNotNull(),
-                F.expr(f"substring(t, off, {max_chars})"),
-            ),
-        )
-        .withColumn("_bk", F.substring("suf", 1, bucket_len))
-    )
-    joined = stream.join(seen_arr, "_bk", "left")
-    nb = _sa_bs_neighbours(joined, max_bucket=max_bucket)
-    # r15: LCP capped at max_chars (the suffix window length — the
-    # exact upper bound on any LCP here); the default 256 cap paid two
-    # extra refinement steps with whole-string memcmp windows
-    scored = nb.select(
-        "doc_id",
-        "off",
-        F.greatest(
-            F.when(
-                F.col("_pred").isNotNull(),
-                F.expr(_CHAR.lcp(b="_pred", cap=max_chars)),
-            ).otherwise(0),
-            F.when(
-                F.col("_succ").isNotNull(),
-                F.expr(_CHAR.lcp(b="_succ", cap=max_chars)),
-            ).otherwise(0),
-        ).alias("_m"),
+    scored, seen_arr = _sa_stream_char(
+        spark, sf_dir, max_chars=64 if full_doc else 128, full_doc=full_doc,
+        obs="sa_stream_cut",
     )
     per_doc = scored.groupBy("doc_id").agg(
         F.sort_array(
             F.collect_list(
                 F.when(
-                    F.col("_m") >= min_len,
+                    F.col("m") >= 30,
                     F.struct(
                         F.col("off").cast("int").alias("s"),
-                        (F.col("off") + F.col("_m") - 1).cast("int").alias("e"),
+                        (F.col("off") + F.col("m") - 1).cast("int").alias("e"),
                     ),
                 )
             )
@@ -2945,28 +2749,13 @@ def _stream_cut_spans_sa(
 
     from pyspark.sql import functions as F
 
-    from chewdata_spark.streaming.ops import run_to_memory
-
     per_doc, seen_arr = _stream_cut_spans_sa_marks(
         spark, sf_dir, full_doc=full_doc
     )
     kind = "full" if full_doc else "head"
-    # persist AND materialize the static bucket arrays before the
-    # stream starts — a stream-static join re-executes the static side
-    # every micro-batch, and in-micro-batch execution of the build
-    # pipeline is far slower than batch mode (see stream_ingest_dedup_sa;
-    # same contract, same 100 TB note)
-    from pyspark import StorageLevel
-
-    seen_arr.persist(StorageLevel.MEMORY_AND_DISK)
-    seen_arr.count()
-    try:
-        marks = run_to_memory(
-            per_doc, f"_stream_cut_spans_sa_{kind}",
-            output_mode="complete",
-        )
-    finally:
-        seen_arr.unpersist()
+    marks = _run_stream_static(
+        per_doc, seen_arr, f"_stream_cut_spans_sa_{kind}"
+    )
 
     # Stateless finish OUTSIDE the stream: the cut is a pure function of
     # (merged marks, text), so the text rides the static doc relation —

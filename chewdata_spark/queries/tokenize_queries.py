@@ -761,12 +761,16 @@ def dedup_incremental_ingest_sa_bpe(
 
 
 def _ingest_sa_bpe_sql() -> str:
-    from chewdata_spark.queries.dedup_queries import _sa_scoring_ctes_tokens
+    from chewdata_spark.queries.dedup_queries import (
+        _SQL_TOKEN,
+        _sa_scoring_ctes,
+    )
 
-    return _bpe_doc_pieces_ctes(_BPE_SA_ITERS) + _sa_scoring_ctes_tokens(
+    return _bpe_doc_pieces_ctes(_BPE_SA_ITERS) + _sa_scoring_ctes(
+        _SQL_TOKEN,
         new_where="doc_id % 2 = 1", seen_where="doc_id % 2 = 0",
-        cmp_tokens=64, bucket_tokens=4, max_bucket=10_000,
-        rel="d", tk_expr="toks", lead=",",
+        cmp_len=64, bucket_len=4, max_bucket=10_000,
+        new_rel="d", seen_rel="d", units="toks", lead=",",
     ) + """, gate AS (
     SELECT doc_id, MAX(m) AS ms FROM scored GROUP BY doc_id
 )
@@ -874,8 +878,8 @@ def contamination_grain_agreement(
 
 def _grain_agreement_sql() -> str:
     from chewdata_spark.queries.dedup_queries import (
+        _SQL_TOKEN,
         _sa_scoring_ctes,
-        _sa_scoring_ctes_tokens,
     )
 
     return (
@@ -885,15 +889,17 @@ def _grain_agreement_sql() -> str:
             cmp_len=128, bucket_len=8, max_bucket=10_000,
             lead=",", prefix="c_",
         )
-        + _sa_scoring_ctes_tokens(
+        + _sa_scoring_ctes(
+            _SQL_TOKEN,
             new_where="doc_id % 2 = 1", seen_where="doc_id % 2 = 0",
-            cmp_tokens=32, bucket_tokens=2, max_bucket=10_000,
+            cmp_len=32, bucket_len=2, max_bucket=10_000,
             lead=",", prefix="t_",
         )
-        + _sa_scoring_ctes_tokens(
+        + _sa_scoring_ctes(
+            _SQL_TOKEN,
             new_where="doc_id % 2 = 1", seen_where="doc_id % 2 = 0",
-            cmp_tokens=64, bucket_tokens=4, max_bucket=10_000,
-            rel="d", tk_expr="toks", lead=",", prefix="b_",
+            cmp_len=64, bucket_len=4, max_bucket=10_000,
+            new_rel="d", seen_rel="d", units="toks", lead=",", prefix="b_",
         )
         + """, cgate AS (
     SELECT doc_id, MAX(m) AS m FROM c_scored GROUP BY doc_id
@@ -947,25 +953,25 @@ def stream_ingest_dedup_sa_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-aggregates (4-piece bucket -> SORTED seen-suffix array) with
     the shared ``max_bucket`` hot-bucket cap + observe metric, each
     arriving suffix BISECTS its bucket's array for pred/succ
-    (``_sa_bs_neighbours`` — token-array comparisons, Spark array
-    ordering), and the only stateful operator is the final per-doc
-    max (complete mode, availableNow).  Docs with no non-empty tokens
-    are not arrivals (the batch twin's encode-join contract), so the
-    SAME oracle replays both twins verbatim."""
+    (operators/suffix.py::_stream_scores — token-array comparisons,
+    Spark array ordering), and the only stateful operator is the
+    final per-doc max (complete mode, availableNow).  Docs with no
+    non-empty tokens are not arrivals (the batch twin's encode-join
+    contract), so the SAME oracle replays both twins verbatim."""
     import os
 
-    from chewdata_spark.operators.suffix import _TOKEN
+    from chewdata_spark.operators.suffix import (
+        _BPE,
+        _seen_bucket_arrays,
+        _stream_scores,
+    )
     from chewdata_spark.operators.text import _tokens
     from chewdata_spark.operators.tokenize import (
         bpe_encode_corpus_rules,
         bpe_pieces_of_tokens_udf,
         bpe_train_rules,
     )
-    from chewdata_spark.queries.dedup_queries import (
-        _OBS_SEQ,
-        _sa_bs_neighbours,
-    )
-    from chewdata_spark.streaming.ops import run_to_memory
+    from chewdata_spark.queries.dedup_queries import _run_stream_static
 
     max_pieces, bucket_pieces, max_bucket = 64, 4, 10_000
     path = os.path.join(sf_dir, "documents.parquet")
@@ -973,41 +979,21 @@ def stream_ingest_dedup_sa_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = spark.read.parquet(path).schema
     rules = bpe_train_rules(docs, "text", iters=_BPE_SA_ITERS)
 
-    # static side: even-id piece streams -> head-window token suffixes
-    # -> capped (bucket -> sorted array), the char stream twin's shape
-    # one grain up
-    seen_suf = (
+    # static side: even-id piece streams, first-64-piece head windows
+    seen_arr = _seen_bucket_arrays(
+        _BPE,
         bpe_encode_corpus_rules(
             docs.filter(F.col("doc_id") % 2 == 0), "doc_id", "text", rules
-        )
-        .select(F.slice(F.split("pieces", " "), 1, max_pieces).alias("t"))
-        .select(
-            "t", F.explode(F.expr("sequence(1, size(t))")).alias("off")
-        )
-        .select(F.expr(f"slice(t, off, {max_pieces})").alias("suf"))
-        .distinct()
-        .withColumn("_bk", F.expr(f"slice(suf, 1, {bucket_pieces})"))
-    )
-    sizes = seen_suf.groupBy("_bk").agg(
-        F.count(F.lit(1)).alias("_n")
-    ).observe(
-        f"sa_stream_ingest_bpe_{next(_OBS_SEQ)}",
-        F.sum(
-            F.when(F.col("_n") > max_bucket, F.lit(1)).otherwise(F.lit(0))
-        ).alias("dropped_hot_buckets"),
-    )
-    seen_arr = (
-        seen_suf.join(
-            sizes.filter(F.col("_n") <= max_bucket).select("_bk"),
-            "_bk",
-            "left_semi",
-        )
-        .groupBy("_bk")
-        .agg(F.sort_array(F.collect_list("suf")).alias("arr"))
+        ).select(
+            "doc_id",
+            F.slice(F.split("pieces", " "), 1, max_pieces).alias(_BPE.col),
+        ),
+        cap=max_pieces, bucket=bucket_pieces, max_bucket=max_bucket,
+        obs="sa_stream_ingest_bpe",
     )
 
     enc = bpe_pieces_of_tokens_udf(rules)
-    stream = (
+    arrivals = (
         spark.readStream.schema(schema)
         .parquet(path + "*")
         .filter(F.col("doc_id") % 2 == 1)
@@ -1021,52 +1007,23 @@ def stream_ingest_dedup_sa_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
         # decouple scoring parallelism from the arrival file layout
         # (one narrow doc-grain shuffle, same device as the char twin)
         .repartition(F.col("doc_id"))
-        .select("doc_id", F.slice(enc("_w"), 1, max_pieces).alias("t"))
         .select(
-            "doc_id",
-            "t",
-            F.explode(F.expr("sequence(1, size(t))")).alias("off"),
+            "doc_id", F.slice(enc("_w"), 1, max_pieces).alias(_BPE.col)
         )
-        .select(
-            "doc_id",
-            F.expr(f"slice(t, off, {max_pieces})").alias("suf"),
-        )
-        .withColumn("_bk", F.expr(f"slice(suf, 1, {bucket_pieces})"))
     )
-    joined = stream.join(seen_arr, "_bk", "left")
-    nb = _sa_bs_neighbours(joined, max_bucket=max_bucket)
-    scored = nb.select(
-        "doc_id",
-        F.greatest(
-            F.when(
-                F.col("_pred").isNotNull(), F.expr(_TOKEN.lcp(b="_pred"))
-            ).otherwise(0),
-            F.when(
-                F.col("_succ").isNotNull(), F.expr(_TOKEN.lcp(b="_succ"))
-            ).otherwise(0),
-        ).alias("_m"),
+    scored = _stream_scores(
+        _BPE, arrivals, seen_arr,
+        cap=max_pieces, bucket=bucket_pieces, max_bucket=max_bucket,
     )
     per_doc = scored.groupBy("doc_id").agg(
-        F.max("_m").cast("int").alias("max_shared_pieces")
+        F.max("m").cast("int").alias("max_shared_pieces")
     )
     out = per_doc.select(
         "doc_id",
         "max_shared_pieces",
         (F.col("max_shared_pieces") < _BPE_SA_MIN_PIECES).alias("kept"),
     )
-    # one batch-mode compute of the static side, cached across
-    # micro-batches (the stream-static join re-executes it otherwise)
-    from pyspark import StorageLevel
-
-    seen_arr.persist(StorageLevel.MEMORY_AND_DISK)
-    seen_arr.count()
-    try:
-        return run_to_memory(
-            out, "_stream_ingest_dedup_sa_bpe",
-            output_mode="complete",
-        )
-    finally:
-        seen_arr.unpersist()
+    return _run_stream_static(out, seen_arr, "_stream_ingest_dedup_sa_bpe")
 
 
 QUERIES["stream_ingest_dedup_sa_bpe"] = stream_ingest_dedup_sa_bpe

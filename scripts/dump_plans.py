@@ -7,8 +7,8 @@ Writes plans/<tag>/<query>.txt (the caller renames to _before/_after
 or passes a tag directory per side).  Process-dependent ids are
 normalized so two checkouts' dumps diff directly: expression ids
 (``#123`` -> ``#N``), the process-global ``observe`` names
-(``sa_ingest_<n>`` / ``sa_arrivals_<n>`` -> ``..._N``), exchange plan
-ids and checkpointed RDD ids with their call sites.
+(``sa_ingest_<n>``, ``minhash_lsh_<n>``, ... -> ``..._N``), exchange
+plan ids and checkpointed RDD ids with their call sites.
 """
 
 from __future__ import annotations
@@ -24,7 +24,15 @@ from chewdata_spark.session import get_spark
 
 _IDS = [
     (re.compile(r"#\d+L?\b"), "#N"),
-    (re.compile(r"\b(sa_ingest|sa_arrivals)_\d+\b"), r"\1_N"),
+    # every observe-name prefix numbered by operators/dedup.py::_OBS_SEQ
+    (
+        re.compile(
+            r"\b(sa_ingest|sa_arrivals|sa_stream_ingest|sa_stream_ingest_bpe"
+            r"|sa_stream_cut|minhash_lsh|simhash_lsh|contamination_probe"
+            r"|entity_resolution)_\d+\b"
+        ),
+        r"\1_N",
+    ),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\] at (\w+) at [^,]*"), r"RDD[N] at \1"),
 ]

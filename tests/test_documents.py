@@ -4,11 +4,13 @@ every format of the same logical record reads back equal to its JSON twin
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from chewdata_spark.sources.documents import read_document, write_document
 
-DATA = "/root/reference/data"
+DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
 FORMATS = ["json", "jsonl", "csv", "xml", "yaml", "toml"]
 EXT = {"json": "json", "jsonl": "jsonl", "csv": "csv", "xml": "xml", "yaml": "yml", "toml": "toml"}
 

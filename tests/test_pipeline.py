@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -11,7 +12,7 @@ from chewdata_spark.sources.documents import read_document
 
 from tests.test_documents import canon_rows
 
-DATA = "/root/reference/data"
+DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
 
 
 def test_csv_to_json_conversion(spark, tmp_path):

@@ -144,14 +144,15 @@ def test_profile_hll_single_shuffle(spark, sf_dir):
 def test_referential_lookup_broadcasts(spark):
     """The compiled lookup idiom must be a broadcast join, never SMJ."""
     from chewdata_spark.pipeline import Pipeline
+    from tests.test_documents import DATA
 
     cfg = [
         {"type": "reader", "connector": {"type": "local",
-                                         "path": "/root/reference/data/multi_lines.json"},
+                                         "path": f"{DATA}/multi_lines.json"},
          "document": {"type": "json"}},
         {"type": "transformer",
          "referentials": {"m": {"connector": {"type": "local",
-                                              "path": "/root/reference/data/mapping.json"},
+                                              "path": f"{DATA}/mapping.json"},
                                 "document": {"type": "json"}}},
          "actions": [{"field": "v",
                       "pattern": "{{ m | filter(attribute='mapping_code', value=input.code) | first | map(attribute='mapping_value') }}"}]},

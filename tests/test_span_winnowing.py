@@ -1041,7 +1041,7 @@ def test_bs_neighbours_equal_filter_scan(spark):
 
     from pyspark.sql import functions as F
 
-    from chewdata_spark.queries.dedup_queries import _sa_bs_neighbours
+    from chewdata_spark.operators.suffix import _bs_neighbours as _sa_bs_neighbours
 
     rng = random.Random(1207)
     alpha = "abcd"
@@ -1073,6 +1073,72 @@ def test_bs_neighbours_equal_filter_scan(spark):
     g = {r["id"]: (r["_pred"], r["_succ"]) for r in got.collect()}
     w = {r["id"]: (r["_pred"], r["_succ"]) for r in want.collect()}
     assert g == w
+
+
+def test_stream_scorer_token_grain_matches_batch_gate(spark, tmp_path):
+    # no registry stream runs the plain token grain: the shared stream
+    # scorer (static bucket arrays + bisection) must give the batch
+    # token gate's per-doc max on the same odd (arriving) / even (seen)
+    # split, including arrivals with no tokens and no seen neighbour
+    from pyspark.sql import functions as F
+
+    from chewdata_spark.operators.suffix import (
+        _TOKEN,
+        _docs,
+        _seen_bucket_arrays,
+        _stream_scores,
+        sa_incremental_contamination_tokens,
+    )
+    from chewdata_spark.queries.dedup_queries import _run_stream_static
+
+    shared = "the quick brown fox jumps over"
+    docs = spark.createDataFrame(
+        [
+            (0, shared + " the lazy dog"),
+            (1, "a " + shared + " again"),
+            (2, "alpha beta gamma delta"),
+            (3, "beta gamma delta epsilon"),
+            (4, "one two three"),
+            (5, "two three four five"),
+            (7, "nothing in common here at all"),
+            (9, None),
+            (11, "   "),
+        ],
+        "doc_id long, text string",
+    )
+    new = docs.filter(F.col("doc_id") % 2 == 1)
+    seen = docs.filter(F.col("doc_id") % 2 == 0)
+    cap, bucket, max_bucket = 8, 2, 10_000
+    want = {
+        r["doc_id"]: r["max_shared_tokens"]
+        for r in sa_incremental_contamination_tokens(
+            new, seen, "doc_id", "text", max_tokens=cap, min_tokens=3,
+            bucket_tokens=bucket, max_bucket=max_bucket,
+        ).collect()
+    }
+    assert want == {1: 6, 3: 3, 5: 2, 7: 0, 9: 0, 11: 0}
+
+    path = str(tmp_path / "arrivals")
+    new.write.parquet(path)
+    arrivals = (
+        spark.readStream.schema(new.schema)
+        .parquet(path)
+        .select(
+            "doc_id",
+            F.slice(_TOKEN.units(F.col("text")), 1, cap).alias(_TOKEN.col),
+        )
+    )
+    seen_arr = _seen_bucket_arrays(
+        _TOKEN, _docs(_TOKEN, seen, "doc_id", "text", cap),
+        cap=cap, bucket=bucket, max_bucket=max_bucket, obs="sa_stream_test",
+    )
+    scored = _stream_scores(
+        _TOKEN, arrivals, seen_arr,
+        cap=cap, bucket=bucket, max_bucket=max_bucket,
+    )
+    per_doc = scored.groupBy("doc_id").agg(F.max("m").alias("m"))
+    got = _run_stream_static(per_doc, seen_arr, "_stream_scorer_tokens")
+    assert {r["doc_id"]: r["m"] for r in got.collect()} == want
 
 
 def test_sa_arrival_hot_bucket_salting(spark):

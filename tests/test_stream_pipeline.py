@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from chewdata_spark.pipeline import Pipeline
 from chewdata_spark.streaming.ops import run_to_memory
+from tests.test_documents import DATA
 
 SF = os.environ.get("CHEWDATA_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -425,7 +426,7 @@ def test_stream_referential_lookup_matches_batch(spark, tmp_path):
             "referentials": {"mapping_ref": {
                 "connector": {
                     "type": "local",
-                    "path": "/root/reference/data/mapping.json"},
+                    "path": f"{DATA}/mapping.json"},
                 "document": {"type": "json"}}},
             "actions": [{
                 "field": "mapped",
