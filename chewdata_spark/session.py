@@ -6,7 +6,9 @@ partition coalescing), shuffle partitions default to the core count
 locally (set to 2-3x total executor cores on a real cluster), and the
 broadcast threshold is generous because our dimension tables (region,
 nation, supplier, part at typical ratios) are tiny next to the fact
-tables.
+tables.  The generated-code cache is sized to hold a whole suffix-array
+pipeline's classes, so a session that reruns a config (CLI, service,
+bench) compiles them once instead of on every run.
 """
 
 from __future__ import annotations
@@ -127,6 +129,13 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # Spark's generated-code cache holds 100 classes by default, but
+        # one char sa_pipeline run generates about 270 distinct classes
+        # (token about 310, BPE 70 more), so the LRU evicted them all and
+        # every warm run compiled them again: about 270 Janino compiles,
+        # 2 s per run.  2000 keeps all three grains and their AQE plan
+        # variants resident, for about 45 KB of heap and metaspace per class.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # local mode runs the WHOLE engine in the driver JVM: 8g
         # GC-starved (GCLocker retry storms, then JVM death) once a
         # full bench session's accumulated code cache / checkpoint

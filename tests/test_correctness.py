@@ -6,10 +6,13 @@ import pytest
 
 from chewdata_spark.queries import all_oracles, all_queries
 
-from tests.oracle import compare, duckdb_connection
+from tests.oracle import compare, duckdb_connection, type_mismatches
 
 QUERIES = all_queries()
 ORACLES = all_oracles()
+# name -> type_mismatches() of its Spark and DuckDB outputs, recorded by
+# test_oracle_match so the type sweep need not build every query again
+TYPE_MISMATCHES: dict[str, list[str]] = {}
 
 
 @pytest.fixture(scope="module")
@@ -27,6 +30,7 @@ def test_every_oracle_has_a_query():
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_match(name, spark, sf_dir, con):
     df = QUERIES[name](spark, sf_dir)
+    TYPE_MISMATCHES[name] = type_mismatches(df, con.sql(ORACLES[name]))
     ok, msg = compare(df, con, ORACLES[name])
     assert ok, f"{name}: {msg}"
 
@@ -44,13 +48,14 @@ def test_oracle_output_types_match_spark(spark, sf_dir, con):
     identical values — round 4's only red row.  compare() enforces the
     type map on every oracle run; this test sweeps ALL oracles'
     DuckDB output types against the Spark schemas explicitly so a
-    drift names itself."""
-    from tests.oracle import type_mismatches
-
+    drift names itself.  It reads what test_oracle_match recorded and
+    builds only the queries that did not run there (run alone, -k)."""
     bad = {}
     for name in sorted(ORACLES):
-        df = QUERIES[name](spark, sf_dir)
-        mm = type_mismatches(df, con.sql(ORACLES[name]))
+        if name not in TYPE_MISMATCHES:
+            df = QUERIES[name](spark, sf_dir)
+            TYPE_MISMATCHES[name] = type_mismatches(df, con.sql(ORACLES[name]))
+        mm = TYPE_MISMATCHES[name]
         if mm:
             bad[name] = mm
     assert not bad, f"Spark/DuckDB output-type drift: {bad}"

@@ -552,3 +552,37 @@ def test_multiline_docs_match_normalize_and_flagship_oracles(spark, tmp_path):
     assert ok, msg
     # the planted passage and leak are really cut, not vacuously equal
     assert con.sql(f"SELECT max(n_cut) FROM ({flagship})").fetchone()[0] > 0
+
+
+def test_warm_sa_curate_corpus_reuses_generated_code(spark):
+    # One sa_curate_corpus run generates more classes than Spark's
+    # default codegen cache (100) holds; get_spark sizes the cache so a
+    # warm rerun compiles next to nothing.  The int ids and the unusual
+    # tile/min_len/compare_cap/bucket_len make most of this test's
+    # classes new to the session's cache, even after the registry's SA
+    # queries have run in it.
+    import random
+
+    from chewdata_spark.operators.curation import sa_curate_corpus
+
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(50)]
+    shared = " ".join(rng.choice(vocab) for _ in range(12))
+    rows = []
+    for d in range(1, 21):
+        text = " ".join(rng.choice(vocab) for _ in range(rng.randint(15, 30)))
+        rows.append((d, text + (" " + shared if d % 3 == 0 else ""), f"s{d % 2}"))
+    docs = spark.createDataFrame(rows, "doc_id int, text string, source string")
+    compiled = []
+    for _ in range(3):
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        sa_curate_corpus(
+            docs.filter("doc_id % 2 = 1"), "doc_id", "text",
+            benchmark=docs.filter("doc_id % 2 = 0"),
+            tile=96, min_len=24, compare_cap=48, bucket_len=6,
+            quota_col="source", carry=["source"],
+        ).collect()
+        compiled.append(codegen.METRIC_COMPILATION_TIME().getCount() - before)
+    assert compiled[0] > 100, compiled
+    assert compiled[2] < 30, compiled
