@@ -1357,7 +1357,10 @@ class Pipeline:
         Complete output mode (streaming exact_dedup upstream) re-emits
         the full result each trigger, so each batch overwrites;
         append mode writes batch 0 with the configured mode (overwrite
-        when an eraser folded in) and appends after."""
+        when an eraser folded in) and appends after.  An unnamed
+        checkpoint is a temporary directory removed once the drain
+        ends."""
+        import shutil
         import tempfile
 
         from chewdata_spark.streaming.ops import run_foreach_batch
@@ -1375,13 +1378,17 @@ class Pipeline:
                 partition_by=partition_cols or None, options=options,
             )
 
-        run_foreach_batch(
-            out,
-            fn,
-            checkpoint=checkpoint
-            or tempfile.mkdtemp(prefix="cdsp_stream_ckpt_"),
-            output_mode=self.stream_output_mode,
-        )
+        temp_ckpt = None if checkpoint else tempfile.mkdtemp(prefix="cdsp_stream_ckpt_")
+        try:
+            run_foreach_batch(
+                out,
+                fn,
+                checkpoint=checkpoint or temp_ckpt,
+                output_mode=self.stream_output_mode,
+            )
+        finally:
+            if temp_ckpt:
+                shutil.rmtree(temp_ckpt, ignore_errors=True)
 
 
 # reference step-type aliases (src/step/mod.rs:27-54)

@@ -861,3 +861,173 @@ def test_stream_csv_reader_honours_document_metadata(spark, tmp_path, metadata, 
     assert batch.columns == streamed.columns == columns
     assert sorted(tuple(r) for r in batch.collect()) == rows
     assert sorted(tuple(r) for r in streamed.collect()) == rows
+
+
+def test_stream_checkpoint_resume_reloads_dedup_state(spark, tmp_path):
+    """The durable-checkpoint contract with state: a second availableNow
+    run of a named-checkpoint ``exact_dedup`` stream reads only the new
+    file, yet its complete-mode output equals the batch pipeline over
+    ALL files.  The first wave's survivors come back from the state
+    store the checkpoint manager wrote, and a smaller key arriving later
+    for an existing signature replaces that signature's survivor."""
+    src = os.path.join(str(tmp_path), "incoming")
+    out = os.path.join(str(tmp_path), "out")
+    ckpt = os.path.join(str(tmp_path), "ckpt")
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass", "").endswith(
+        ".checkpointing.FileSystemBasedCheckpointFileManager")
+
+    def land(rows):
+        spark.createDataFrame(rows, "doc_id int, text string").coalesce(1).write.mode(
+            "append").parquet(src)
+
+    def cfg(stream: bool):
+        rd = {"type": "reader", "connector": {"type": "local", "path": src},
+              "document": {"type": "parquet"}}
+        steps = [rd, {"type": "curate", "method": "exact_dedup", "key": "doc_id"}]
+        if stream:
+            rd["stream"] = True
+            steps.append({"type": "writer", "checkpoint": ckpt,
+                          "connector": {"type": "local", "path": out},
+                          "document": {"type": "parquet"}})
+        return steps
+
+    def landed():
+        return sorted(tuple(r) for r in spark.read.parquet(out).select(
+            "doc_id", "text").collect())
+
+    land([(5, "alpha"), (7, "beta"), (3, "beta")])
+    Pipeline(cfg(True), spark).run()
+    assert landed() == [(3, "beta"), (5, "alpha")]
+    land([(2, "alpha"), (9, "gamma")])
+    Pipeline(cfg(True), spark).run()
+    batch = sorted(tuple(r) for r in Pipeline(cfg(False), spark).dataframe().select(
+        "doc_id", "text").collect())
+    assert batch == [(2, "alpha"), (3, "beta"), (9, "gamma")]
+    assert landed() == batch
+    # one committed batch per run: the second run read only the new
+    # file, so (3, "beta") came back from the first run's state files
+    commits = os.listdir(os.path.join(ckpt, "commits"))
+    assert sorted(c for c in commits if not c.startswith(".")) == ["0", "1"]
+
+
+def test_stream_unnamed_checkpoint_is_removed(spark, tmp_path, monkeypatch):
+    """A streaming writer with no ``checkpoint`` drains through a
+    temporary checkpoint directory and removes it once the query ends,
+    so repeated runs leave no state files behind in the temp dir."""
+    import tempfile
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    src = os.path.join(str(tmp_path), "src")
+    out = os.path.join(str(tmp_path), "out")
+    spark.createDataFrame(
+        [(1, "same"), (2, "same"), (3, "other")], "doc_id int, text string"
+    ).coalesce(1).write.parquet(src)
+    cfg = [
+        {"type": "reader", "stream": True,
+         "connector": {"type": "local", "path": src},
+         "document": {"type": "parquet"}},
+        {"type": "curate", "method": "exact_dedup", "key": "doc_id"},
+        {"type": "writer", "connector": {"type": "local", "path": out},
+         "document": {"type": "parquet"}},
+    ]
+    for _ in range(2):
+        Pipeline(cfg, spark).run()
+    assert sorted(r.doc_id for r in spark.read.parquet(out).collect()) == [1, 3]
+    assert os.listdir(tmp) == []
+
+
+_READLINK_PROBE = r"""
+import json, os, sys
+from chewdata_spark.pipeline import Pipeline
+from chewdata_spark.session import get_spark
+
+src, out, log = sys.argv[1:4]
+KEY = "spark.sql.streaming.checkpointFileManagerClass"
+spark = get_spark("readlink-probe")
+spark.sparkContext.setLogLevel("ERROR")
+default = spark.conf.get(KEY, None)
+
+
+def spawned():
+    if not os.path.exists(log):
+        return 0
+    with open(log) as fh:
+        return len(fh.readlines())
+
+
+def drain(name, manager):
+    if manager is None:
+        spark.conf.unset(KEY)
+    else:
+        spark.conf.set(KEY, manager)
+    target = os.path.join(out, name)
+    cfg = [
+        {"type": "reader", "stream": True,
+         "connector": {"type": "local", "path": src},
+         "document": {"type": "jsonl"}},
+        {"type": "curate", "method": "exact_dedup", "key": "id", "field": "s"},
+        {"type": "writer", "checkpoint": target + "_ckpt",
+         "connector": {"type": "local", "path": target},
+         "document": {"type": "jsonl"}},
+    ]
+    before = spawned()
+    Pipeline(cfg, spark).run()
+    ids = sorted(r.id for r in spark.read.json(target).collect())
+    return {"readlink": spawned() - before, "ids": ids}
+
+
+control = drain("control", "org.apache.spark.sql.execution.streaming."
+                "checkpointing.FileContextBasedCheckpointFileManager")
+print(json.dumps({"default": default, "control": control,
+                  "session_default": drain("default", default)}))
+"""
+
+
+def test_stream_checkpoint_writes_spawn_no_readlink(tmp_path):
+    """Streaming checkpoint and state-store files are written without a
+    ``readlink`` process per file.  Without the native Hadoop library,
+    Spark's FileContext checkpoint manager checks each rename target
+    through a shell ``readlink``; the session default (the FileSystem
+    manager) checks in-process.  A fresh JVM with a logging ``readlink``
+    first on PATH drains the same ``exact_dedup`` stream twice: under
+    the FileContext manager (the control: the shim must log) and under
+    the session default (it must log nothing)."""
+    import shutil
+    import subprocess
+    import sys
+
+    real = shutil.which("readlink")
+    shims = tmp_path / "bin"
+    shims.mkdir()
+    log = tmp_path / "readlink.log"
+    shim = shims / "readlink"
+    shim.write_text(f'#!/bin/sh\necho "$@" >> "{log}"\nexec "{real}" "$@"\n')
+    shim.chmod(0o755)
+    src = tmp_path / "src"
+    src.mkdir()
+    for i, rows in enumerate([[(4, "a"), (2, "b")], [(1, "a"), (3, "c")]]):
+        (src / f"part-{i}.jsonl").write_text(
+            "".join(json.dumps({"id": k, "s": s}) + "\n" for k, s in rows))
+    (tmp_path / "tmp").mkdir()
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(
+        os.environ,
+        PATH=f"{shims}{os.pathsep}{os.environ.get('PATH', '')}",
+        PYTHONPATH=os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")])),
+        SPARK_GRAFT_CPUS="1",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+        SPARK_LOCAL_DIRS=str(tmp_path / "local"),
+        TMPDIR=str(tmp_path / "tmp"),
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", _READLINK_PROBE, str(src), str(tmp_path / "out"), str(log)],
+        env=env, cwd=str(tmp_path), capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert got["control"]["ids"] == got["session_default"]["ids"] == [1, 2, 3]
+    assert got["control"]["readlink"] > 0
+    assert got["session_default"]["readlink"] == 0
+    assert got["default"].endswith(".checkpointing.FileSystemBasedCheckpointFileManager")
